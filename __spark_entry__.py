@@ -132,8 +132,8 @@ def oracle_sql() -> dict[str, str]:
     tok = f"regexp_extract_all(lower(text), '{TOKEN_RE2}')"
     bm25_terms = "('window'), ('shuffle'), ('join')"
     post_terms = "('data'), ('spark'), ('query')"
-    # shared by bm25_topk_wand (driver cursor walk) and bm25_topk_wand_dist
-    # (executor-side applyInPandas walk): both must equal the from-scratch
+    # shared by bm25_topk_wand (driver route) and bm25_topk_wand_dist
+    # (executor-side applyInPandas route): both must equal the from-scratch
     # SQL BM25. dl comes from the documents table directly (not the token
     # unnest, which drops zero-token docs) so N/avgdl count ALL docs like the
     # Spark plan and the on-disk index stats do.
@@ -1138,7 +1138,7 @@ def oracle_sql() -> dict[str, str]:
         # equal the same from-scratch SQL BM25 as the other two paths
         "bm25_sql_surface": bm25_topk_sql,
         # q+fq through the SQL surface: same filtered oracle as the
-        # distributed filtered walk (scores unchanged, visibility filtered)
+        # distributed filtered route (scores unchanged, visibility filtered)
         "bm25_sql_fq": bm25_filtered_sql,
         "bm25_topk_and": bm25_and_sql,
         # exact phrase over the positional index vs the from-scratch

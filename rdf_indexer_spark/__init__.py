@@ -13,11 +13,12 @@ re-expressed Spark-first:
 * the part the reference delegates to Solr/Lucene — tokenization, posting
   lists, BM25 top-k — is internalized (``index/``): postings are built with
   ``groupBy(term, doc_id)``, delta+varbyte-packed into per-term blocks with
-  block-max scores, and queried with document-at-a-time block-max WAND.
+  block-max scores, and queried with an exact columnar BM25 top-k.
 
 Everything here derives from public knowledge only: the Apache Spark API, the
 reference repo's observable behavior, and published IR literature (BM25:
-Robertson & Zaragoza 2009; block-max WAND: Ding & Suel, SIGIR 2011).
+Robertson & Zaragoza 2009; block-max metadata after Ding & Suel, SIGIR
+2011).
 """
 
 __version__ = "0.1.0"

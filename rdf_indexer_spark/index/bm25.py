@@ -1,4 +1,4 @@
-"""BM25 top-k retrieval: exhaustive scorer + block-max WAND (Q-9).
+"""BM25 top-k retrieval: one columnar scoring core on three routes (Q-9).
 
 Similarity pinned per SURVEY.md §7.4 — Lucene ``BM25Similarity`` defaults,
 exact form (no norm quantization):
@@ -8,43 +8,44 @@ exact form (no norm quantization):
     k1 = 1.2, b = 0.75; ties broken (score desc, doc_id asc)
 
 **Determinism discipline** (SURVEY.md §4.3.6): per-term idf values are
-computed ONCE driver-side and injected as literals into both paths; per-doc
-summation runs in ascending-term order in both paths (the exhaustive path
-sorts the contribution array before folding). The two paths therefore agree
-to float ulps and the test suite asserts rank + score identity.
+computed ONCE driver-side and injected as literals everywhere; per-doc
+summation runs in a fixed clause order (ascending term for plain terms),
+and the exhaustive path sorts the contribution array before folding. The
+paths therefore agree to float ulps and the test suite asserts rank +
+score identity.
 
-**The two paths**:
+**The scorers**:
 
-* ``score_exhaustive`` — declarative DataFrame plan over the ``postings``
-  table: broadcast the (tiny) query-term idf table, compute contributions
-  JVM-side, fold per doc, ``orderBy(score desc, doc_id).limit(k)``. This is
-  the oracle and the path whose physical plan Catalyst fully owns (predicate
-  pushdown prunes the posting scan to the query's terms).
+* ``score_exhaustive`` / ``score_phrase_exhaustive`` — declarative
+  DataFrame plans over the postings relation: broadcast the (tiny)
+  query-term idf table, compute contributions JVM-side, fold per doc,
+  ``orderBy(score desc, doc_id).limit(k)``. These are the oracles and the
+  paths whose physical plan Catalyst fully owns (predicate pushdown prunes
+  the posting scan to the query's terms).
 
-* ``search_wand`` — document-at-a-time iteration over the packed blocks with
-  block-max pruning (Ding & Suel, SIGIR 2011). Blocks for the query's terms
-  are pruned by the parquet ``term`` predicate (a handful of rows per term),
-  fetched, and walked with numpy decode — the classic top-k engine shape.
-
-* ``search_wand_distributed`` — the cluster path: the SAME cursor walk runs
-  inside ``applyInPandas`` grouped by the index's ``part`` buckets (disjoint
-  sorted doc-id ranges by construction — build.py:15-28), each bucket
-  emitting its local exact top-k, and the driver merges ≤ parts·k tiny rows.
-  Nothing bigger than (num_parts × k) rows ever reaches the driver — a hot
-  term's gigabytes of blocks stay on the executors. Exactness: per-part WAND
-  with θ=-inf is exact within the part (less pruning than a shared θ, never
-  less correct), parts partition the doc space, and per-doc float summation
-  runs in ascending-term order in both paths, so ranks AND scores are
-  bit-identical to the driver walk (asserted in tests/test_index.py).
+* The columnar core (bottom of this module) — every other query shape
+  (plain terms in or/and mode, boolean, grouped, phrase, mixed, synonyms)
+  is a list of scoring units ``(weight, ids, tf, dl)`` scored by ONE numpy
+  pass in ``_vec_topk``; a phrase is a unit whose tf is its phrase
+  frequency. It runs on three routes with the same local top-k function:
+  the driver (``search_wand`` and friends: term-pruned block fetch, decode,
+  score), the executors (``search_wand_distributed`` and friends: one
+  ``applyInPandas`` group per index ``part`` bucket — disjoint sorted
+  doc-id ranges by construction, build.py:15-28 — each emitting its exact
+  local top-k, the driver merging ≤ parts·k rows, so a hot term's blocks
+  stay on the executors) and the SQL surface's worker (``sqlsurface``).
+  Parts partition the doc space and each doc's float sum runs in the same
+  order everywhere, so ranks AND scores are bit-identical across routes
+  (asserted in tests/test_index.py). No block-max skipping happens today:
+  every posting of the query's terms is decoded and scored.
 """
 
 from __future__ import annotations
 
-import heapq
 import math
 import os
 import re
-from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -222,14 +223,15 @@ class IndexReader:
         out = scored.orderBy(F.desc("score"), F.asc("doc_id"))
         return out.limit(k) if k is not None else out
 
-    # -- block-max WAND ------------------------------------------------------
+    # -- the columnar core on the driver and executor routes ----------------
 
     def fetch_blocks(
         self, terms: list[str], with_positions: bool = False,
     ) -> dict[str, list]:
+        """The driver route's block fetch: the terms' packed block rows,
+        collected and grouped ``{term: blocks sorted by first_doc_id}``."""
         blocks = self._read(self.paths.blocks)
-        cols = ["term", "first_doc_id", "last_doc_id", "n", "max_tf",
-                "dl_min", "ids_bin", "tfs_bin", "dls_bin"]
+        cols = ["term", "first_doc_id", "ids_bin", "tfs_bin", "dls_bin"]
         if with_positions:
             if "pos_bin" not in blocks.columns:
                 raise ValueError(
@@ -245,24 +247,19 @@ class IndexReader:
             raise ValueError(
                 "not a positional index: rebuild with "
                 "build_index(positions=True) for phrase queries")
-        by_term: dict[str, list] = {}
-        for r in rows:
-            by_term.setdefault(r["term"], []).append(r)
-        for t in by_term:
-            by_term[t].sort(key=lambda r: r["first_doc_id"])
-        return by_term
+        return _by_term(rows)
 
     def allowed_ids(self, where: str | None) -> np.ndarray | None:
         """SQL predicate over the docstore → sorted visible doc_id set (the
-        fq filter surface of the DRIVER walk only).
+        fq filter surface of the DRIVER route only).
 
         This collects the visible ids to the driver, so it is only safe
-        where the driver walk itself is: a small index / debug path.
-        ``search()`` routes every filtered query to the distributed walk,
-        which evaluates the predicate executor-side (cogrouped per part —
-        see :meth:`search_wand_distributed`) and never materializes the
-        visible-id set on the driver, matching Solr fq semantics of
-        evaluating filters inside the index (SolrClient.java:144-163)."""
+        where the driver route itself is: a small index / debug path.
+        ``search()`` routes every filtered query to the executors, which
+        evaluate the predicate per part (see :meth:`_per_part`) and never
+        materialize the visible-id set on the driver, matching Solr fq
+        semantics of evaluating filters inside the index
+        (SolrClient.java:144-163)."""
         if where is None:
             return None
         rows = (
@@ -271,31 +268,124 @@ class IndexReader:
         )
         return np.sort(np.array([r["doc_id"] for r in rows], dtype=np.int64))
 
+    def _route(self, stats: dict[str, dict], where: str | None,
+               distributed: bool | None) -> bool:
+        """Resolve ``distributed=None`` the way :meth:`search` does and
+        record the route in ``self.last_path``: filtered queries always
+        run on the executors (the fq set stays there); otherwise the
+        build-time byte estimate of the blocks to fetch decides, with the
+        postings count as the fallback on pre-r4 indexes."""
+        if distributed is None:
+            if where is not None:
+                distributed = True
+            elif all(s["bytes"] is not None for s in stats.values()):
+                distributed = (sum(s["bytes"] for s in stats.values())
+                               > self.DISTRIBUTED_FETCH_BYTES)
+            else:
+                distributed = (sum(s["df"] for s in stats.values())
+                               > self.DISTRIBUTED_POSTINGS_THRESHOLD)
+        self.last_path = "distributed" if distributed else "driver"
+        return distributed
+
+    def _per_part(self, kernel, terms: list[str], where: str | None,
+                  schema: str, positions: bool = False) -> DataFrame:
+        """The executor route: one ``applyInPandas`` group per index
+        ``part`` bucket, running ``kernel(by_term, deleted, allowed) →
+        rows`` over that part's blocks of ``terms`` (rows match
+        ``schema``, which carries ``doc_id`` and ``score``).
+
+        ``where`` (fq) is evaluated entirely executor-side: the docstore
+        predicate scan is COGROUPED with the block scan on ``part`` (both
+        are hive-partitioned by part, so each part's kernel receives exactly
+        its own visible ids through the shuffle), the way Solr evaluates fq
+        inside the index (SolrClient.java:144-163). Nothing about the
+        visible-id set ever reaches the driver — for an unselective
+        predicate at 10^12-doc scale the per-part id sets stay
+        O(docs/parts) on the executors. Tombstones ride a broadcast, so the
+        task closure stays O(1) in their count."""
+        if positions:
+            self._require_positional()
+        blocks = (
+            self._read(self.paths.blocks)
+            .filter(F.col("term").isin(terms))
+            .select("part", "term", "first_doc_id", "ids_bin", "tfs_bin",
+                    "dls_bin", *(["pos_bin"] if positions else []))
+        )
+        names = [c.split()[0] for c in schema.split(",")]
+        tomb_bc = self._tomb_bc
+
+        def _part(pdf, allow):
+            import pandas as pd
+
+            rows = []
+            # skip parts with no query postings or no visible docs
+            if not pdf.empty and (allow is None or len(allow)):
+                rows = kernel(_by_term(pdf.to_dict("records")),
+                              tomb_bc.value, allow)
+            return pd.DataFrame(rows, columns=names).astype(
+                {"doc_id": "int64", "score": "float64"})
+
+        if where is None:
+            return blocks.groupBy("part").applyInPandas(
+                lambda pdf: _part(pdf, None), schema=schema)
+        visible = (
+            self._read(self.paths.docstore)
+            .filter(where).select("part", "doc_id")
+        )
+        return (
+            blocks.groupBy("part")
+            .cogroup(visible.groupBy("part"))
+            .applyInPandas(
+                lambda bl, vis: _part(
+                    bl, np.unique(vis["doc_id"].values.astype(np.int64))),
+                schema=schema)
+        )
+
+    def _top_k(self, local, terms: list[str], k: int, where: str | None,
+               distributed: bool, positions: bool = False,
+               ) -> list[tuple[int, float]]:
+        """Run one local top-k ``local(by_term, deleted, allowed)`` over the
+        blocks of ``terms``: on the driver (collect the blocks, score
+        there), or per part on the executors with a driver merge of the
+        ≤ parts·k local hits under (score desc, doc_id asc) — exact, since
+        parts hold disjoint doc ids."""
+        if not distributed:
+            return local(self.fetch_blocks(terms, with_positions=positions),
+                         self.tombstones, self.allowed_ids(where))
+        rows = self._per_part(local, terms, where, "doc_id long, score double",
+                              positions).collect()
+        rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
+        return [(int(r["doc_id"]), float(r["score"])) for r in rows[:k]]
+
+    def _search_terms(
+        self, query: str, k: int, mode: str, where: str | None,
+        idfs: dict[str, float] | None, after: tuple[int, float] | None,
+        distributed: bool,
+    ) -> list[tuple[int, float]]:
+        terms = sorted(set(tokenize(query)))
+        spec = _terms_spec(terms, mode)
+        idfs = self.idfs(terms) if idfs is None else idfs
+        if not idfs:
+            return []
+        local = partial(_local_clauses, spec=spec, idfs=idfs, k=k,
+                        avgdl=self.avgdl, after=after)
+        return self._top_k(local, sorted(idfs), k, where, distributed)
+
     def search_wand(
         self, query: str, k: int = 10, *, mode: str = "or",
         where: str | None = None, _idfs: dict[str, float] | None = None,
         after: tuple[int, float] | None = None,
     ) -> list[tuple[int, float]]:
-        terms = sorted(set(tokenize(query)))
-        idfs = self.idfs(terms) if _idfs is None else _idfs
-        if not idfs:
-            return []
-        allowed = self.allowed_ids(where)
-        blocks = self.fetch_blocks(list(idfs))
-        cursors = [
-            _Cursor(t, idfs[t], blocks[t], self.avgdl)
-            for t in sorted(idfs) if t in blocks
-        ]
-        if mode == "and":
-            # strict Lucene +required semantics: EVERY query term is
-            # required, so a term absent from the index matches nothing
-            return _and_topk(cursors, k, len(terms),
-                             deleted=self.tombstones, allowed=allowed,
-                             after=after)
-        if mode != "or":
-            raise ValueError(f"unknown mode: {mode!r}")
-        return _wand_topk(cursors, k, deleted=self.tombstones, allowed=allowed,
-                          after=after)
+        """Exact top-k on the DRIVER route: the query terms' blocks are
+        fetched (pruned by the parquet ``term`` predicate), decoded and
+        scored by the columnar core. ``mode="and"`` is strict Lucene
+        +required (every query term required; a term absent from the index
+        matches nothing). ``where`` is the fq visibility filter
+        (:meth:`allowed_ids`). ``after`` = the previous page's last
+        ``(doc_id, score)`` hit (Lucene ``searchAfter`` / Solr cursorMark):
+        only hits strictly after it in (score desc, doc_id asc) order."""
+        return self._search_terms(query, k, mode, where, _idfs, after,
+                                  distributed=False)
 
     def search_phrase(
         self, phrase: str, k: int = 10, *, where: str | None = None,
@@ -321,24 +411,21 @@ class IndexReader:
         a match is an in-order occurrence of all phrase terms with at
         most ``slop`` intervening positions total, pf counts match start
         positions unweighted (vs Lucene's 1/(distance+1) weights). Both
-        deviations documented; :func:`_phrase_freq` defines the contract
+        deviations documented; :func:`_phrase_unit` defines the contract
         and the DuckDB oracle restates it (``bm25_phrase_slop``).
 
         ``distributed=None`` auto-routes like :meth:`search`: the per-part
-        executor walk (:meth:`search_phrase_distributed`) unless the
-        estimated fetch volume is driver-walk small; filtered queries
-        always route distributed so the fq set stays executor-side. (The
-        byte estimate is the CORE payload — a positional fetch is ~1.2×
-        that, so routing leans driver slightly; acceptable, the threshold
-        is an order-of-magnitude knob.) The route taken is recorded in
-        ``self.last_path``.
+        executor route unless the estimated fetch volume is driver small;
+        filtered queries always route distributed so the fq set stays
+        executor-side. (The byte estimate is the CORE payload — a
+        positional fetch is ~1.2× that, so routing leans driver slightly;
+        acceptable, the threshold is an order-of-magnitude knob.) The route
+        taken is recorded in ``self.last_path``.
 
-        Plan shape (driver walk): the conjunctive leapfrog of
-        :func:`_and_topk` over the DISTINCT terms' cursors (docs failing
-        the AND intersection never decode positions), then a position-list
-        intersection (:func:`_phrase_freq`) only at aligned docs —
-        positions stream lazily per block, nothing but the phrase terms'
-        blocks is read."""
+        The phrase is ONE scoring unit of the columnar core: its pf per doc
+        is computed vectorized over the docs holding every phrase term
+        (:func:`_phrase_unit`); nothing but the phrase terms' blocks is
+        read."""
         terms = tokenize(phrase)  # in order, duplicates kept
         if not terms or k <= 0:
             return []
@@ -347,55 +434,25 @@ class IndexReader:
         if any(t not in stats for t in uniq):
             return []
         idfs = {t: self._idf(stats[t]["df"]) for t in uniq}
-        idf_sum = sum(idfs[t] for t in terms)
-        if distributed is None:
-            if where is not None:
-                distributed = True
-            elif all(s["bytes"] is not None for s in stats.values()):
-                distributed = (sum(s["bytes"] for s in stats.values())
-                               > self.DISTRIBUTED_FETCH_BYTES)
-            else:
-                distributed = (sum(s["df"] for s in stats.values())
-                               > self.DISTRIBUTED_POSTINGS_THRESHOLD)
-        self.last_path = "distributed" if distributed else "driver"
-        if distributed:
-            return self._phrase_walk_distributed(
-                terms, uniq, idfs, idf_sum, k, where, slop)
-        allowed = self.allowed_ids(where)
-        blocks = self.fetch_blocks(uniq, with_positions=True)
-        if any(t not in blocks for t in uniq):
-            return []
-        cursors = {
-            t: _Cursor(t, idfs[t], blocks[t], self.avgdl)
-            for t in uniq
-        }
-        return _phrase_topk(terms, cursors, idf_sum, k, self.avgdl,
-                            deleted=self.tombstones, allowed=allowed,
-                            slop=slop)
+        spec = ([], [], [], [(terms, True, 1.0, slop)], [])
+        local = partial(_local_clauses, spec=spec, idfs=idfs, k=k,
+                        avgdl=self.avgdl)
+        return self._top_k(local, uniq, k, where,
+                           self._route(stats, where, distributed),
+                           positions=True)
 
     def search_phrase_distributed(
         self, phrase: str, k: int = 10, *, where: str | None = None,
         slop: int = 0,
     ) -> list[tuple[int, float]]:
-        """Exact-phrase top-k with the position-list leapfrog ON THE
-        EXECUTORS — the cluster-scale phrase shape, mirroring
-        :meth:`search_wand_distributed`: one ``applyInPandas`` group per
-        index ``part`` bucket (disjoint doc-id ranges, so phrase matching
-        is bucket-local), exact local top-k per bucket, driver merge of
-        ≤ parts·k rows. ``where`` is evaluated executor-side via the same
-        part-cogrouped docstore scan. Rank- and score-identical to the
-        driver walk (asserted in tests)."""
-        terms = tokenize(phrase)
-        if not terms or k <= 0:
-            return []
-        uniq = sorted(set(terms))
-        stats = self.term_stats(uniq)
-        if any(t not in stats for t in uniq):
-            return []
-        idfs = {t: self._idf(stats[t]["df"]) for t in uniq}
-        idf_sum = sum(idfs[t] for t in terms)
-        return self._phrase_walk_distributed(terms, uniq, idfs, idf_sum,
-                                             k, where, slop)
+        """:meth:`search_phrase` pinned to the executor route — the
+        cluster-scale phrase shape: one group per index ``part`` bucket
+        (disjoint doc-id ranges, so phrase matching is bucket-local), exact
+        local top-k per bucket, driver merge of ≤ parts·k rows. ``where``
+        is evaluated executor-side. Rank- and score-identical to the driver
+        route (asserted in tests)."""
+        return self.search_phrase(phrase, k, where=where, slop=slop,
+                                  distributed=True)
 
     def _require_positional(self) -> None:
         """Raise unless the blocks carry real positional payloads (cached
@@ -414,73 +471,6 @@ class IndexReader:
             raise ValueError(
                 "not a positional index: rebuild with "
                 "build_index(positions=True) for phrase queries")
-
-    def _phrase_walk_distributed(
-        self, terms: list[str], uniq: list[str], idfs: dict[str, float],
-        idf_sum: float, k: int, where: str | None, slop: int = 0,
-    ) -> list[tuple[int, float]]:
-        self._require_positional()
-        avgdl = self.avgdl
-        tomb_bc = self._tomb_bc
-        blocks = (
-            self._read(self.paths.blocks)
-            .filter(F.col("term").isin(uniq))
-            .select("part", "term", "first_doc_id", "last_doc_id", "n",
-                    "max_tf", "dl_min", "ids_bin", "tfs_bin", "dls_bin",
-                    "pos_bin")
-        )
-
-        def _walk(pdf, allow):
-            import pandas as pd
-
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")}
-            )
-            if allow is not None and len(allow) == 0:
-                return empty
-            by_term: dict[str, list] = {}
-            for rec in pdf.to_dict("records"):
-                by_term.setdefault(rec["term"], []).append(rec)
-            if any(t not in by_term for t in uniq):
-                return empty  # bucket lacks a required term: no phrase hit
-            for t in by_term:
-                by_term[t].sort(key=lambda r: r["first_doc_id"])
-            cursors = {
-                t: _Cursor(t, idfs[t], by_term[t], avgdl) for t in uniq
-            }
-            hits = _phrase_topk(terms, cursors, idf_sum, k, avgdl,
-                                deleted=tomb_bc.value, allowed=allow,
-                                slop=slop)
-            return pd.DataFrame(
-                {"doc_id": [d for d, _ in hits],
-                 "score": [s for _, s in hits]},
-                columns=["doc_id", "score"],
-            ).astype({"doc_id": "int64", "score": "float64"})
-
-        out_schema = "doc_id long, score double"
-        if where is None:
-            local = blocks.groupBy("part").applyInPandas(
-                lambda pdf: _walk(pdf, None), schema=out_schema
-            ).collect()
-        else:
-            visible = (
-                self._read(self.paths.docstore)
-                .filter(where).select("part", "doc_id")
-            )
-
-            def _walk_filtered(bl_pdf, vis_pdf):
-                allow = np.unique(vis_pdf["doc_id"].values.astype(np.int64))
-                return _walk(bl_pdf, allow)
-
-            local = (
-                blocks.groupBy("part")
-                .cogroup(visible.groupBy("part"))
-                .applyInPandas(_walk_filtered, schema=out_schema)
-                .collect()
-            )
-        merged = sorted(local, key=lambda r: (-r["score"], r["doc_id"]))[:k]
-        return [(int(r["doc_id"]), float(r["score"])) for r in merged]
 
     def postings_view_positional(self, terms: list[str]) -> DataFrame:
         """(term, doc_id, tf, dl, positions) decoded from the packed blocks
@@ -504,7 +494,7 @@ class IndexReader:
         phrase terms' positional postings, slide each phrase slot i to its
         start position (pos − i), count per-doc aligned starts (= phrase
         frequency) via successive equi-joins, score once per doc. Identity
-        with the walk is asserted in tests/test_index.py."""
+        with the columnar route is asserted in tests/test_index.py."""
         terms = tokenize(phrase)
         empty = self.spark.createDataFrame([], "doc_id long, score double")
         if not terms:
@@ -558,99 +548,17 @@ class IndexReader:
         where: str | None = None, _idfs: dict[str, float] | None = None,
         after: tuple[int, float] | None = None,
     ) -> list[tuple[int, float]]:
-        """Distributed exact top-k with the scorer on the executors.
-
-        One ``applyInPandas`` group per index ``part`` bucket (disjoint doc-id
-        ranges), local exact top-k per bucket (the vectorized kernel via
-        ``_wand_topk``'s dispatch), driver k-way merge of
-        ≤ parts·k rows. Rank- and score-identical to :meth:`search_wand`.
-        ``mode="and"`` = conjunctive leapfrog per bucket (a bucket missing a
-        term's postings matches nothing — exact).
-
-        ``where`` = fq visibility filter, evaluated entirely executor-side:
-        the docstore predicate scan is COGROUPED with the block scan on
-        ``part`` (both are hive-partitioned by part, so each bucket's walker
-        receives exactly its own visible ids through the shuffle), the way
-        Solr evaluates fq inside the index (SolrClient.java:144-163).
-        Nothing about the visible-id set ever reaches the driver — for an
-        unselective predicate at 10^12-doc scale the per-part id sets stay
-        O(docs/parts) on the executors while the driver still sees only
-        parts·k result rows."""
-        if mode not in ("or", "and"):
-            raise ValueError(f"unknown mode: {mode!r}")
-        terms = sorted(set(tokenize(query)))
-        idfs = self.idfs(terms) if _idfs is None else _idfs
-        if not idfs:
-            return []
-        avgdl = self.avgdl
-        n_required = len(terms)  # strict +required: absent term → no hits
-        tomb_bc = self._tomb_bc  # Broadcast handle: O(1) in the closure
-        blocks = (
-            self._read(self.paths.blocks)
-            .filter(F.col("term").isin(list(idfs)))
-            .select("part", "term", "first_doc_id", "last_doc_id", "n",
-                    "max_tf", "dl_min", "ids_bin", "tfs_bin", "dls_bin")
-        )
-
-        def _walk(pdf, allow):
-            import pandas as pd
-
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")}
-            )
-            if allow is not None and len(allow) == 0:
-                return empty  # no visible docs in this part: skip the walk
-            by_term: dict[str, list] = {}
-            for rec in pdf.to_dict("records"):
-                by_term.setdefault(rec["term"], []).append(rec)
-            if not by_term:
-                return empty  # part has visible docs but no query postings
-            for t in by_term:
-                by_term[t].sort(key=lambda r: r["first_doc_id"])
-            cursors = [
-                _Cursor(t, idfs[t], by_term[t], avgdl)
-                for t in sorted(by_term)
-            ]
-            # the same `after` cursor applies verbatim per part: parts hold
-            # disjoint doc ids, so "strictly after (s0, d0)" is a pure
-            # per-doc predicate and the driver merge of per-part pages is
-            # exactly the global page
-            if mode == "and":
-                hits = _and_topk(cursors, k, n_required,
-                                 deleted=tomb_bc.value, allowed=allow,
-                                 after=after)
-            else:
-                hits = _wand_topk(cursors, k, deleted=tomb_bc.value,
-                                  allowed=allow, after=after)
-            return pd.DataFrame(
-                {"doc_id": [d for d, _ in hits], "score": [s for _, s in hits]},
-                columns=["doc_id", "score"],
-            ).astype({"doc_id": "int64", "score": "float64"})
-
-        out_schema = "doc_id long, score double"
-        if where is None:
-            local = blocks.groupBy("part").applyInPandas(
-                lambda pdf: _walk(pdf, None), schema=out_schema
-            ).collect()
-        else:
-            visible = (
-                self._read(self.paths.docstore)
-                .filter(where).select("part", "doc_id")
-            )
-
-            def _walk_filtered(bl_pdf, vis_pdf):
-                allow = np.unique(vis_pdf["doc_id"].values.astype(np.int64))
-                return _walk(bl_pdf, allow)
-
-            local = (
-                blocks.groupBy("part")
-                .cogroup(visible.groupBy("part"))
-                .applyInPandas(_walk_filtered, schema=out_schema)
-                .collect()
-            )
-        merged = sorted(local, key=lambda r: (-r["score"], r["doc_id"]))[:k]
-        return [(int(r["doc_id"]), float(r["score"])) for r in merged]
+        """:meth:`search_wand` on the executor route: one ``applyInPandas``
+        group per index ``part`` bucket (disjoint doc-id ranges), local
+        exact top-k per bucket, driver merge of ≤ parts·k rows (see
+        :meth:`_per_part`; ``where`` never reaches the driver). Rank- and
+        score-identical to :meth:`search_wand`. In ``mode="and"`` a bucket
+        missing a term's postings matches nothing — exact. The same
+        ``after`` mark applies verbatim per part: parts hold disjoint doc
+        ids, so "strictly after (s0, d0)" is a per-doc predicate and the
+        merge of per-part pages is exactly the global page."""
+        return self._search_terms(query, k, mode, where, _idfs, after,
+                                  distributed=True)
 
     def search_many(
         self, queries: dict[str, str], k: int = 10, *, mode: str = "or",
@@ -663,13 +571,12 @@ class IndexReader:
 
         ``queries`` maps query_id → query string. One termstats scan fetches
         df for the UNION of all terms; one block scan (pruned to that
-        union) feeds the per-part walker, which runs the same exact
-        WAND/AND cursor walk once per query over the part's shared block
-        rows and emits each query's local top-k. The global merge is a
-        window-rank DataFrame job over those ≤ parts·k·|Q| rows — nothing
-        funnels through the driver, so a 100k-query offline replay scales
-        with the cluster. ``where`` uses the same cogrouped executor-side
-        fq evaluation as :meth:`search_wand_distributed`.
+        union) feeds the per-part kernel (:meth:`_per_part`), which decodes
+        each term's blocks ONCE for the whole set and scores every query
+        through the columnar core over the shared arrays. The global merge
+        is a window-rank DataFrame job over those ≤ parts·k·|Q| rows —
+        nothing funnels through the driver, so a 100k-query offline replay
+        scales with the cluster. ``where`` is the same executor-side fq.
 
         Returns (query_id, doc_id, score, rank) — per query rank- and
         score-identical to :meth:`search_wand` (asserted in tests)."""
@@ -684,87 +591,32 @@ class IndexReader:
             return self.spark.createDataFrame(
                 [], "query_id string, doc_id long, score double, rank int")
         avgdl = self.avgdl
-        tomb_bc = self._tomb_bc
-        n_required = {qid: len(ts) for qid, ts in q_terms.items()}
-        blocks = (
-            self._read(self.paths.blocks)
-            .filter(F.col("term").isin(live_terms))
-            .select("part", "term", "first_doc_id", "last_doc_id", "n",
-                    "max_tf", "dl_min", "ids_bin", "tfs_bin", "dls_bin")
-        )
 
-        def _walk_many(pdf, allow):
-            import pandas as pd
-
-            empty = pd.DataFrame({
-                "query_id": pd.Series(dtype="object"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            })
-            if allow is not None and len(allow) == 0:
-                return empty
-            by_term: dict[str, list] = {}
-            for rec in pdf.to_dict("records"):
-                by_term.setdefault(rec["term"], []).append(rec)
-            if not by_term:
-                return empty
-            for t in by_term:
-                by_term[t].sort(key=lambda r: r["first_doc_id"])
-            # decode each term's blocks ONCE for the whole query set (the
-            # per-query cursor construction re-decoded shared terms |Q|
-            # times); every query then scores through the vectorized exact
-            # kernel over the shared arrays — identical hits to the cursor
-            # walks (same fold order: ascending term, same masks/tie-break)
+        def _many(by_term, deleted, allowed):
             arrs = {t: _decode_term_arrays(bl) for t, bl in by_term.items()}
-            out_q, out_d, out_s = [], [], []
+            rows = []
             for qid, ts in q_terms.items():
-                present = [t for t in ts if t in arrs]  # ts sorted asc
-                if not present:
-                    continue
-                units = [(idfs[t], *arrs[t]) for t in present]
+                units = [(idfs[t], *arrs[t]) for t in ts if t in arrs]
                 if mode == "and":
-                    if len(present) < n_required[qid]:
+                    if len(units) < len(ts):
                         continue  # a required term has no postings here
                     hits = _vec_topk([[u] for u in units], [], k, avgdl,
-                                     deleted=tomb_bc.value, allowed=allow)
+                                     deleted=deleted, allowed=allowed)
                 else:
                     hits = _vec_topk([], units, k, avgdl,
-                                     deleted=tomb_bc.value, allowed=allow)
-                for d, s in hits:
-                    out_q.append(qid)
-                    out_d.append(d)
-                    out_s.append(s)
-            return pd.DataFrame(
-                {"query_id": out_q, "doc_id": out_d, "score": out_s},
-            ).astype({"doc_id": "int64", "score": "float64"})
+                                     deleted=deleted, allowed=allowed)
+                rows.extend((qid, d, s) for d, s in hits)
+            return rows
 
-        out_schema = "query_id string, doc_id long, score double"
-        if where is None:
-            local = blocks.groupBy("part").applyInPandas(
-                lambda pdf: _walk_many(pdf, None), schema=out_schema
-            )
-        else:
-            visible = (
-                self._read(self.paths.docstore)
-                .filter(where).select("part", "doc_id")
-            )
-
-            def _walk_many_filtered(bl_pdf, vis_pdf):
-                allow = np.unique(vis_pdf["doc_id"].values.astype(np.int64))
-                return _walk_many(bl_pdf, allow)
-
-            local = (
-                blocks.groupBy("part")
-                .cogroup(visible.groupBy("part"))
-                .applyInPandas(_walk_many_filtered, schema=out_schema)
-            )
+        local = self._per_part(_many, live_terms, where,
+                               "query_id string, doc_id long, score double")
         # The global per-query merge is a DataFrame job, NOT a driver
         # collect: a 100k-query offline replay at 64 parts × k=10 would
         # otherwise funnel 64M rows through one driver. Parts hold disjoint
         # doc-id ranges so every (query_id, doc_id) pair appears at most
         # once — row_number over (score desc, doc_id asc) is exactly the
-        # k-way merge the driver used to do, and the tiny shuffle moves
-        # only ≤ parts·k rows per query.
+        # k-way merge, and the tiny shuffle moves only ≤ parts·k rows per
+        # query.
         from pyspark.sql import Window
 
         w = Window.partitionBy("query_id").orderBy(
@@ -938,8 +790,8 @@ class IndexReader:
 
         The seed analysis is a driver-side tokenize of ONE document plus
         one termstats scan (df for the seed's distinct terms); the search
-        itself is the normal auto-routed WAND walk, so the heavy part
-        inherits the distributed shape. Seed exclusion is a k+1
+        itself is a normal term query on the executor route, so the
+        heavy part stays distributed. Seed exclusion is a k+1
         overfetch + post-drop, NOT an fq predicate: the fq path scans the
         docstore to build the visible set, which is the right shape for a
         real ``where`` but absurd for excluding one known id (the top-k
@@ -1144,151 +996,31 @@ class IndexReader:
         BM25Similarity has no coord() factor and neither does this.
 
         ``min_should_match`` = Lucene's minimumNumberShouldMatch (Solr
-        dismax ``mm``): a matching doc must additionally align at least
+        dismax ``mm``): a matching doc must additionally contain at least
         that many SHOULD clauses — one clause per DISTINCT should term
         after analysis (our dedup rule), clauses counted whether or not
         the term is indexed (an unindexed clause can never match, so
         ``mm`` > index-present clauses matches nothing, Lucene's rule).
-        Pure-SHOULD queries with ``mm`` > 1 run the exact counting OR
-        walk (:func:`_or_topk` — Lucene's own MinShouldMatchSumScorer
-        also forgoes WAND there); ``mm`` ≤ 1 keeps block-max pruning.
 
         MUST_NOT at scale: the prohibited terms' postings are decoded
-        ids-only WHERE THE WALK RUNS — per part bucket on the executors in
-        the distributed path — and merged into the walker's deleted set;
-        the exclusion set never crosses the network (each part only ever
-        sees its own stripe's prohibited ids). ``where`` composes as the
-        usual fq predicate. Auto-routing follows :meth:`search`:
-        byte-estimate guard, filtered queries always distributed."""
+        ids-only WHERE THE SCORER RUNS — per part bucket on the executors
+        in the distributed route — and merged into its deleted set; the
+        exclusion set never crosses the network (each part only ever sees
+        its own stripe's prohibited ids). ``where`` composes as the usual
+        fq predicate. Auto-routing follows :meth:`search`: byte-estimate
+        guard over scored AND prohibited terms (the driver route fetches
+        MUST_NOT postings too, so a cheap +rare query with a hot "-the"
+        clause belongs on the executors), filtered queries always
+        distributed."""
         norm = lambda xs: [t for x in xs for t in tokenize(x)]  # noqa: E731
         must_t = sorted(set(norm(must)))
-        must_not_t = sorted(set(norm(must_not)))
         should_t = sorted(set(norm(should)) - set(must_t))
-        if not must_t and not should_t:
-            return []
-        scored_terms = sorted(set(must_t) | set(should_t))
-        # ONE termstats scan covers scored AND prohibited terms: the
-        # driver path fetches MUST_NOT postings too (ids-only, but the
-        # bytes still move), so routing must price them in — a cheap
-        # +rare query with a hot "-the" clause belongs on the executors.
-        all_stats = self.term_stats(sorted(set(scored_terms)
-                                           | set(must_not_t)))
-        stats = {t: s for t, s in all_stats.items() if t in set(scored_terms)}
-        if any(t not in stats for t in must_t):
-            return []  # strict +required: an unindexed MUST term → ∅
         boosts = boosts or {}
-        idfs = {t: self._idf(s["df"]) * float(boosts.get(t, 1.0))
-                for t, s in stats.items()}
-        if not idfs:
-            return []
-        fetch_terms = sorted(set(idfs) | set(must_not_t))
-        avgdl = self.avgdl
-        n_required = len(must_t)
-        if distributed is None:
-            if where is not None:
-                distributed = True
-            elif all(s["bytes"] is not None for s in all_stats.values()):
-                est = sum(s["bytes"] for s in all_stats.values())
-                distributed = est > self.DISTRIBUTED_FETCH_BYTES
-            else:
-                distributed = (sum(s["df"] for s in all_stats.values())
-                               > self.DISTRIBUTED_POSTINGS_THRESHOLD)
-
-        must_set, should_set = set(must_t), set(should_t)
-        mn_set = set(must_not_t)
-        mm = int(min_should_match)
-
-        if not distributed:
-            allowed = self.allowed_ids(where)
-            blocks = self.fetch_blocks(fetch_terms)
-            excluded = _excluded_ids(
-                [r for t in must_not_t for r in blocks.get(t, [])])
-            merged = _merge_deleted(self.tombstones, excluded)
-            must_c = [_Cursor(t, idfs[t], blocks[t], avgdl)
-                      for t in must_t if t in blocks]
-            should_c = [_Cursor(t, idfs[t], blocks[t], avgdl)
-                        for t in should_t if t in blocks]
-            if must_t:
-                return _boolean_topk(must_c, should_c, k, n_required,
-                                     deleted=merged, allowed=allowed,
-                                     min_should_match=mm)
-            if mm > 1:
-                return _or_topk(should_c, k, deleted=merged,
-                                allowed=allowed, min_match=mm)
-            return _wand_topk(should_c, k, deleted=merged, allowed=allowed)
-
-        tomb_bc = self._tomb_bc
-        blocks_df = (
-            self._read(self.paths.blocks)
-            .filter(F.col("term").isin(fetch_terms))
-            .select("part", "term", "first_doc_id", "last_doc_id", "n",
-                    "max_tf", "dl_min", "ids_bin", "tfs_bin", "dls_bin")
-        )
-
-        def _walk(pdf, allow):
-            import pandas as pd
-
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")})
-            if allow is not None and len(allow) == 0:
-                return empty
-            by_term: dict[str, list] = {}
-            for rec in pdf.to_dict("records"):
-                by_term.setdefault(rec["term"], []).append(rec)
-            if not by_term:
-                return empty
-            for t in by_term:
-                by_term[t].sort(key=lambda r: r["first_doc_id"])
-            excluded = _excluded_ids(
-                [r for t in mn_set for r in by_term.get(t, [])])
-            merged = _merge_deleted(tomb_bc.value, excluded)
-            must_c = [_Cursor(t, idfs[t], by_term[t], avgdl)
-                      for t in sorted(must_set) if t in by_term]
-            should_c = [_Cursor(t, idfs[t], by_term[t], avgdl)
-                        for t in sorted(should_set) if t in by_term]
-            if must_set:
-                hits = _boolean_topk(must_c, should_c, k, n_required,
-                                     deleted=merged, allowed=allow,
-                                     min_should_match=mm)
-            elif mm > 1:
-                hits = _or_topk(should_c, k, deleted=merged,
-                                allowed=allow, min_match=mm)
-            elif should_c:
-                hits = _wand_topk(should_c, k, deleted=merged,
-                                  allowed=allow)
-            else:
-                hits = []
-            return pd.DataFrame(
-                {"doc_id": [d for d, _ in hits],
-                 "score": [s for _, s in hits]},
-                columns=["doc_id", "score"],
-            ).astype({"doc_id": "int64", "score": "float64"})
-
-        out_schema = "doc_id long, score double"
-        if where is None:
-            local = blocks_df.groupBy("part").applyInPandas(
-                lambda pdf: _walk(pdf, None), schema=out_schema
-            ).collect()
-        else:
-            visible = (
-                self._read(self.paths.docstore)
-                .filter(where).select("part", "doc_id")
-            )
-
-            def _walk_filtered(bl_pdf, vis_pdf):
-                allow = np.unique(vis_pdf["doc_id"].values.astype(np.int64))
-                return _walk(bl_pdf, allow)
-
-            local = (
-                blocks_df.groupBy("part")
-                .cogroup(visible.groupBy("part"))
-                .applyInPandas(_walk_filtered, schema=out_schema)
-                .collect()
-            )
-        merged_rows = sorted(local, key=lambda r: (-r["score"], r["doc_id"]))
-        return [(int(r["doc_id"]), float(r["score"]))
-                for r in merged_rows[:k]]
+        spec = ([([t], float(boosts.get(t, 1.0))) for t in must_t],
+                [(t, float(boosts.get(t, 1.0))) for t in should_t],
+                sorted(set(norm(must_not))), [], [])
+        return self._search_clauses(spec, k, where, distributed,
+                                    mm=int(min_should_match))
 
     def search_grouped_boolean(
         self, groups: list[tuple[list[str], float]],
@@ -1306,252 +1038,65 @@ class IndexReader:
         matches nothing (Lucene: an empty rewritten MUST clause is
         MatchNoDocs). SHOULD / MUST_NOT / ``boosts`` / ``where`` behave as
         in :meth:`search_boolean`; routing uses the same byte estimate
-        over ALL touched terms, and the distributed path runs the grouped
-        walk per part bucket with the standard ≤ parts·k driver merge."""
+        over ALL touched terms."""
         norm = lambda xs: [t for x in xs for t in tokenize(x)]  # noqa: E731
-        groups_t: list[tuple[list[str], float]] = [
-            (sorted(set(norm(g))), float(b)) for g, b in groups
-        ]
-        if any(not g for g, _ in groups_t):
-            return []
-        must_not_t = sorted(set(norm(must_not)))
-        group_terms = sorted({t for g, _ in groups_t for t in g})
-        should_t = sorted(set(norm(should)) - set(group_terms))
-        stat_terms = sorted(set(group_terms) | set(should_t)
-                            | set(must_not_t))
-        all_stats = self.term_stats(stat_terms)
-        # drop index-absent members; an emptied group → MatchNoDocs
-        groups_t = [([t for t in g if t in all_stats], b)
-                    for g, b in groups_t]
-        if any(not g for g, _ in groups_t):
-            return []
+        groups_t = [(sorted(set(norm(g))), float(b)) for g, b in groups]
+        group_terms = {t for g, _ in groups_t for t in g}
+        should_t = sorted(set(norm(should)) - group_terms)
         boosts = boosts or {}
-        base_idfs = {t: self._idf(s["df"]) for t, s in all_stats.items()
-                     if t in set(group_terms) | set(should_t)}
-        should_idfs = {t: base_idfs[t] * float(boosts.get(t, 1.0))
-                       for t in should_t if t in base_idfs}
-        fetch_terms = sorted({t for g, _ in groups_t for t in g}
-                             | set(should_idfs) | set(must_not_t))
-        avgdl = self.avgdl
-        if distributed is None:
-            if where is not None:
-                distributed = True
-            elif all(s["bytes"] is not None for s in all_stats.values()):
-                est = sum(s["bytes"] for s in all_stats.values())
-                distributed = est > self.DISTRIBUTED_FETCH_BYTES
-            else:
-                distributed = (sum(s["df"] for s in all_stats.values())
-                               > self.DISTRIBUTED_POSTINGS_THRESHOLD)
-        self.last_path = "distributed" if distributed else "driver"
-        mn_set = set(must_not_t)
+        spec = (groups_t, [(t, float(boosts.get(t, 1.0))) for t in should_t],
+                sorted(set(norm(must_not))), [], [])
+        return self._search_clauses(spec, k, where, distributed)
 
-        def _mk_cursors(by_term: dict[str, list]):
-            gs = [
-                [_Cursor(t, base_idfs[t] * b, by_term[t], avgdl)
-                 for t in g if t in by_term]
-                for g, b in groups_t
-            ]
-            sc = [_Cursor(t, should_idfs[t], by_term[t], avgdl)
-                  for t in sorted(should_idfs) if t in by_term]
-            return gs, sc
-
-        if not distributed:
-            allowed = self.allowed_ids(where)
-            blocks = self.fetch_blocks(fetch_terms)
-            excluded = _excluded_ids(
-                [r for t in must_not_t for r in blocks.get(t, [])])
-            merged = _merge_deleted(self.tombstones, excluded)
-            gs, sc = _mk_cursors(blocks)
-            return _grouped_topk(gs, sc, k, deleted=merged, allowed=allowed)
-
-        tomb_bc = self._tomb_bc
-        blocks_df = (
-            self._read(self.paths.blocks)
-            .filter(F.col("term").isin(fetch_terms))
-            .select("part", "term", "first_doc_id", "last_doc_id", "n",
-                    "max_tf", "dl_min", "ids_bin", "tfs_bin", "dls_bin")
-        )
-
-        def _walk(pdf, allow):
-            import pandas as pd
-
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")})
-            if allow is not None and len(allow) == 0:
-                return empty
-            by_term: dict[str, list] = {}
-            for rec in pdf.to_dict("records"):
-                by_term.setdefault(rec["term"], []).append(rec)
-            if not by_term:
-                return empty
-            for t in by_term:
-                by_term[t].sort(key=lambda r: r["first_doc_id"])
-            excluded = _excluded_ids(
-                [r for t in mn_set for r in by_term.get(t, [])])
-            merged = _merge_deleted(tomb_bc.value, excluded)
-            gs, sc = _mk_cursors(by_term)
-            hits = _grouped_topk(gs, sc, k, deleted=merged, allowed=allow)
-            return pd.DataFrame(
-                {"doc_id": [d for d, _ in hits],
-                 "score": [s for _, s in hits]},
-                columns=["doc_id", "score"],
-            ).astype({"doc_id": "int64", "score": "float64"})
-
-        out_schema = "doc_id long, score double"
-        if where is None:
-            local = blocks_df.groupBy("part").applyInPandas(
-                lambda pdf: _walk(pdf, None), schema=out_schema
-            ).collect()
-        else:
-            visible = (
-                self._read(self.paths.docstore)
-                .filter(where).select("part", "doc_id")
-            )
-
-            def _walk_filtered(bl_pdf, vis_pdf):
-                allow = np.unique(vis_pdf["doc_id"].values.astype(np.int64))
-                return _walk(bl_pdf, allow)
-
-            local = (
-                blocks_df.groupBy("part")
-                .cogroup(visible.groupBy("part"))
-                .applyInPandas(_walk_filtered, schema=out_schema)
-                .collect()
-            )
-        merged_rows = sorted(local, key=lambda r: (-r["score"], r["doc_id"]))
-        return [(int(r["doc_id"]), float(r["score"]))
-                for r in merged_rows[:k]]
-
-    def _search_mixed(
-        self, spec, k: int = 10, *, where: str | None = None,
-        distributed: bool | None = None,
+    def _search_clauses(
+        self, spec, k: int, where: str | None, distributed: bool | None,
+        mm: int = 0,
     ) -> list[tuple[int, float]]:
-        """Execute a MIXED clause set — phrases interleaved with boolean
-        term clauses inside one scorer tree, the composition Lucene's
-        BooleanQuery performs natively (``+"table hash" filter -dup``).
-        ``spec`` comes from :func:`_mixed_spec`. Requires a positional
-        index (the phrase members decode positions).
+        """Execute one clause tree (the spec of :func:`_local_clauses`):
+        boolean, grouped and MIXED clause sets — phrases interleaved with
+        term clauses, the composition Lucene's BooleanQuery performs
+        natively (``+"table hash" filter -dup``; spec from
+        :func:`_mixed_spec`, positional index required).
 
-        Plan shape: ONE termstats scan (stats + routing + idf), ONE
-        term-pruned block fetch WITH positions, then :func:`_mixed_walk` —
-        required phrases are singleton groups of a :class:`_PhraseCursor`
-        on the grouped leapfrog, optional phrases are riders; MUST_NOT
-        postings decode ids-only where the walk runs. Auto-routing as in
-        :meth:`search`: filtered queries always distributed, otherwise the
-        build-time byte estimate (positions make the true fetch ~1.2× the
-        CORE payload — same documented lean as :meth:`search_phrase`).
-        The distributed path runs the identical walk per part bucket
-        (disjoint doc-id stripes make phrase matching bucket-local) with
-        the standard ≤ parts·k driver merge."""
+        Plan shape: ONE termstats scan (stats + routing + idf; a required
+        clause with no indexed member is MatchNoDocs right here), ONE
+        term-pruned block fetch — WITH positions when the spec has phrase
+        clauses — then :func:`_local_clauses` on the route
+        :meth:`_route` picks (positions make the true fetch ~1.2× the
+        CORE byte estimate — same documented lean as
+        :meth:`search_phrase`). Disjoint doc-id stripes make phrase
+        matching bucket-local on the executor route."""
         term_groups, should_terms, must_not, phrases, not_phrases = spec
-        self._require_positional()
+        positional = bool(phrases or not_phrases)
+        if positional:
+            self._require_positional()
         phrase_terms = {t for toks, *_ in phrases for t in toks}
         np_terms = {t for toks, _ in not_phrases for t in toks}
-        scored = sorted({t for g, _ in term_groups for t in g}
-                        | {t for t, _ in should_terms} | phrase_terms)
+        scored = ({t for g, _ in term_groups for t in g}
+                  | {t for t, _ in should_terms} | phrase_terms)
         if not scored:
             return []
-        all_stats = self.term_stats(
-            sorted(set(scored) | set(must_not) | np_terms))
-        # global MatchNoDocs: a required clause with an unindexed member
+        all_stats = self.term_stats(sorted(scored | set(must_not)
+                                           | np_terms))
         for g, _ in term_groups:
             if not any(t in all_stats for t in g):
                 return []
         for toks, required, _, _ in phrases:
             if required and any(t not in all_stats for t in toks):
                 return []
-        base_idfs = {t: self._idf(s["df"]) for t, s in all_stats.items()
-                     if t in set(scored)}
-        if not base_idfs:
+        idfs = {t: self._idf(s["df"]) for t, s in all_stats.items()
+                if t in scored}
+        if not idfs:
             return []
-        avgdl = self.avgdl
-        if distributed is None:
-            if where is not None:
-                distributed = True
-            elif all(s["bytes"] is not None for s in all_stats.values()):
-                est = sum(s["bytes"] for s in all_stats.values())
-                distributed = est > self.DISTRIBUTED_FETCH_BYTES
-            else:
-                distributed = (sum(s["df"] for s in all_stats.values())
-                               > self.DISTRIBUTED_POSTINGS_THRESHOLD)
-        self.last_path = "distributed" if distributed else "driver"
-        # prohibited-phrase terms fetch too (position walks build their
-        # exclusion sets), pruned to index-present ones
-        fetch = sorted(set(base_idfs) | set(must_not)
+        # prohibited terms and prohibited-phrase terms fetch too (their ids
+        # are excluded where the scorer runs)
+        fetch = sorted(set(idfs) | set(must_not)
                        | (np_terms & set(all_stats)))
-        mn_set = set(must_not)
-
-        if not distributed:
-            allowed = self.allowed_ids(where)
-            blocks = self.fetch_blocks(fetch, with_positions=True)
-            excluded = _excluded_ids(
-                [r for t in must_not for r in blocks.get(t, [])])
-            merged = _merge_deleted(self.tombstones, excluded)
-            return _mixed_walk(blocks, base_idfs, avgdl, term_groups,
-                               should_terms, phrases, k, merged, allowed,
-                               not_phrases=not_phrases)
-
-        tomb_bc = self._tomb_bc
-        blocks_df = (
-            self._read(self.paths.blocks)
-            .filter(F.col("term").isin(fetch))
-            .select("part", "term", "first_doc_id", "last_doc_id", "n",
-                    "max_tf", "dl_min", "ids_bin", "tfs_bin", "dls_bin",
-                    "pos_bin")
-        )
-
-        def _walk(pdf, allow):
-            import pandas as pd
-
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")})
-            if allow is not None and len(allow) == 0:
-                return empty
-            by_term: dict[str, list] = {}
-            for rec in pdf.to_dict("records"):
-                by_term.setdefault(rec["term"], []).append(rec)
-            if not by_term:
-                return empty
-            for t in by_term:
-                by_term[t].sort(key=lambda r: r["first_doc_id"])
-            excluded = _excluded_ids(
-                [r for t in mn_set for r in by_term.get(t, [])])
-            merged = _merge_deleted(tomb_bc.value, excluded)
-            hits = _mixed_walk(by_term, base_idfs, avgdl, term_groups,
-                               should_terms, phrases, k, merged, allow,
-                               not_phrases=not_phrases)
-            return pd.DataFrame(
-                {"doc_id": [d for d, _ in hits],
-                 "score": [s for _, s in hits]},
-                columns=["doc_id", "score"],
-            ).astype({"doc_id": "int64", "score": "float64"})
-
-        out_schema = "doc_id long, score double"
-        if where is None:
-            local = blocks_df.groupBy("part").applyInPandas(
-                lambda pdf: _walk(pdf, None), schema=out_schema
-            ).collect()
-        else:
-            visible = (
-                self._read(self.paths.docstore)
-                .filter(where).select("part", "doc_id")
-            )
-
-            def _walk_filtered(bl_pdf, vis_pdf):
-                allow = np.unique(vis_pdf["doc_id"].values.astype(np.int64))
-                return _walk(bl_pdf, allow)
-
-            local = (
-                blocks_df.groupBy("part")
-                .cogroup(visible.groupBy("part"))
-                .applyInPandas(_walk_filtered, schema=out_schema)
-                .collect()
-            )
-        merged_rows = sorted(local, key=lambda r: (-r["score"], r["doc_id"]))
-        return [(int(r["doc_id"]), float(r["score"]))
-                for r in merged_rows[:k]]
+        local = partial(_local_clauses, spec=spec, idfs=idfs, k=k,
+                        avgdl=self.avgdl, mm=mm)
+        return self._top_k(local, fetch, k, where,
+                           self._route(all_stats, where, distributed),
+                           positions=positional)
 
     def search_lucene(
         self, q: str, k: int = 10, *, where: str | None = None,
@@ -1561,25 +1106,24 @@ class IndexReader:
         the reference's production surface speaks): ``+required``,
         ``-prohibited``, ``"exact phrase"`` (+ ``~slop``), ``term^boost``,
         ``wild*ard`` and ``fuzzy~N`` — parsed by :mod:`.qparse` and routed
-        onto the native walks.
+        onto the columnar core.
 
         Multi-term clauses (wildcard/fuzzy) expand against the term
         dictionary (:meth:`expand_wildcard` / :meth:`expand_fuzzy`, one
         termstats scan each, deterministic top-df caps): SHOULD expansions
         join the should list, MUST_NOT expansions the prohibited list, and
-        MUST expansions become at-least-one-of groups on the grouped walk
+        MUST expansions become at-least-one-of groups
         (:meth:`search_grouped_boolean`) — Lucene's SCORING_BOOLEAN
         rewrite, every expanded term scoring with its own idf under the
         clause's boost.
 
-        Routing: a lone unboosted phrase clause runs the dedicated
-        positional phrase walk (slop honored, byte-based auto-routing);
+        Routing: a lone unboosted phrase clause runs
+        :meth:`search_phrase` (slop honored, byte-based auto-routing);
         phrase clauses MIXED with any other clause (or boosted, or
-        several) run the one-scorer-tree mixed walk (:meth:`_search_mixed`
-        — required phrases gate via :class:`_PhraseCursor` groups,
-        optional ones ride). Pure term-clause queries run
-        :meth:`search_boolean` (or the grouped walk when MUST expansions
-        exist) and keep their WAND/block-max pruning."""
+        several) run one clause tree (:meth:`_search_clauses` — required
+        phrases gate as their own unit groups, optional ones ride). Pure
+        term-clause queries run :meth:`search_boolean` (or
+        :meth:`search_grouped_boolean` when MUST expansions exist)."""
         from .qparse import parse_query
 
         p = parse_query(q)
@@ -1610,8 +1154,7 @@ class IndexReader:
             spec = _mixed_spec(p, expansions)
             if spec is None:
                 return []  # empty rewritten MUST clause: MatchNoDocs
-            return self._search_mixed(spec, k, where=where,
-                                      distributed=distributed)
+            return self._search_clauses(spec, k, where, distributed)
         for exp, occ, b in expansions:
             if occ == "-":
                 must_not.extend(exp)
@@ -1682,14 +1225,31 @@ class IndexReader:
 
     def _synonym_groups(self, query: str,
                         synonyms: dict[str, list[str]]):
-        """Query tokens → synonym groups: [(name, members)] with members
-        deduped, plus the sorted union of all member terms."""
+        """Query tokens → synonym groups [(name, live members, idf)]: one
+        group per distinct token, members deduped and pruned to indexed
+        terms (groups with none dropped), idf from the max member df
+        (SynonymQuery's docFreq blend); plus the sorted live member
+        union. ONE termstats scan."""
         groups = []
         for t in sorted(set(tokenize(query))):
             members = sorted({t, *(synonyms.get(t) or [])})
             groups.append(("|".join(members), members))
-        all_terms = sorted({m for _, ms in groups for m in ms})
-        return groups, all_terms
+        stats = self.term_stats(sorted({m for _, ms in groups for m in ms}))
+        spec = []
+        for name, members in groups:
+            live = [m for m in members if m in stats]
+            if live:
+                spec.append((name, live,
+                             self._idf(max(stats[m]["df"] for m in live))))
+        return spec, sorted({m for _, ms, _ in spec for m in ms})
+
+    def _search_synonyms(self, query, synonyms, k, where, distributed):
+        groups, live_terms = self._synonym_groups(query, synonyms)
+        if not groups:
+            return []
+        local = partial(_local_synonyms, groups=groups, k=k,
+                        avgdl=self.avgdl)
+        return self._top_k(local, live_terms, k, where, distributed)
 
     def search_synonyms(
         self, query: str, synonyms: dict[str, list[str]], k: int = 10, *,
@@ -1700,117 +1260,24 @@ class IndexReader:
         the sum of member tfs, idf comes from the max member df — so a
         doc never scores a concept twice just for using both spellings
         (the Solr SynonymGraphFilter query-time shape). Exact top-k under
-        (score desc, doc_id asc) via the disjunctive merge walk; groups
-        whose every member is unindexed simply contribute nothing.
+        (score desc, doc_id asc); groups whose every member is unindexed
+        simply contribute nothing.
 
-        Driver walk (block fetch is one term-pruned scan over the union
+        Driver route (block fetch is one term-pruned scan over the union
         of member terms); see :meth:`search_synonyms_distributed` for the
         per-part executor shape."""
-        groups, all_terms = self._synonym_groups(query, synonyms)
-        stats = self.term_stats(all_terms)
-        if not stats:
-            return []
-        allowed = self.allowed_ids(where)
-        blocks = self.fetch_blocks([t for t in all_terms if t in stats])
-        cursors = []
-        for name, members in groups:
-            live = [m for m in members if m in stats and m in blocks]
-            if not live:
-                continue
-            idf = self._idf(max(stats[m]["df"] for m in live))
-            cursors.append(_SynCursor(
-                [_Cursor(m, 0.0, blocks[m], self.avgdl) for m in live],
-                idf, self.avgdl, name))
-        if not cursors:
-            return []
-        return _or_topk(cursors, k, deleted=self.tombstones, allowed=allowed)
+        return self._search_synonyms(query, synonyms, k, where, False)
 
     def search_synonyms_distributed(
         self, query: str, synonyms: dict[str, list[str]], k: int = 10, *,
         where: str | None = None,
     ) -> list[tuple[int, float]]:
-        """The executor-side twin of :meth:`search_synonyms`: one
-        applyInPandas group per index part bucket (disjoint doc ids, so
-        per-part exact top-k merge is the global answer), idfs computed
-        once from a single termstats scan and shipped in the closure;
-        the fq predicate cogroups with the block scan like every other
-        distributed walk. Rank- and score-identical to the driver walk."""
-        groups, all_terms = self._synonym_groups(query, synonyms)
-        stats = self.term_stats(all_terms)
-        if not stats:
-            return []
-        group_spec = []  # (name, live_members, idf)
-        for name, members in groups:
-            live = [m for m in members if m in stats]
-            if live:
-                group_spec.append(
-                    (name, live,
-                     self._idf(max(stats[m]["df"] for m in live))))
-        if not group_spec:
-            return []
-        avgdl = self.avgdl
-        tomb_bc = self._tomb_bc
-        live_terms = sorted({m for _, ms, _ in group_spec for m in ms})
-        blocks = (
-            self._read(self.paths.blocks)
-            .filter(F.col("term").isin(live_terms))
-            .select("part", "term", "first_doc_id", "last_doc_id", "n",
-                    "max_tf", "dl_min", "ids_bin", "tfs_bin", "dls_bin")
-        )
-
-        def _walk(pdf, allow):
-            import pandas as pd
-
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")})
-            if allow is not None and len(allow) == 0:
-                return empty
-            by_term: dict[str, list] = {}
-            for rec in pdf.to_dict("records"):
-                by_term.setdefault(rec["term"], []).append(rec)
-            for t in by_term:
-                by_term[t].sort(key=lambda r: r["first_doc_id"])
-            cursors = []
-            for name, members, idf in group_spec:
-                live = [m for m in members if m in by_term]
-                if not live:
-                    continue
-                cursors.append(_SynCursor(
-                    [_Cursor(m, 0.0, by_term[m], avgdl) for m in live],
-                    idf, avgdl, name))
-            if not cursors:
-                return empty
-            hits = _or_topk(cursors, k, deleted=tomb_bc.value,
-                            allowed=allow)
-            return pd.DataFrame(
-                {"doc_id": [d for d, _ in hits],
-                 "score": [sc for _, sc in hits]},
-                columns=["doc_id", "score"],
-            ).astype({"doc_id": "int64", "score": "float64"})
-
-        out_schema = "doc_id long, score double"
-        if where is None:
-            local = blocks.groupBy("part").applyInPandas(
-                lambda pdf: _walk(pdf, None), schema=out_schema).collect()
-        else:
-            visible = (
-                self._read(self.paths.docstore)
-                .filter(where).select("part", "doc_id")
-            )
-
-            def _walk_filtered(bl_pdf, vis_pdf):
-                allow = np.unique(vis_pdf["doc_id"].values.astype(np.int64))
-                return _walk(bl_pdf, allow)
-
-            local = (
-                blocks.groupBy("part")
-                .cogroup(visible.groupBy("part"))
-                .applyInPandas(_walk_filtered, schema=out_schema)
-                .collect()
-            )
-        merged = sorted(local, key=lambda r: (-r["score"], r["doc_id"]))[:k]
-        return [(int(r["doc_id"]), float(r["score"])) for r in merged]
+        """:meth:`search_synonyms` on the executor route: one group per
+        index part bucket (disjoint doc ids, so the merge of per-part exact
+        top-k is the global answer), idfs computed once from a single
+        termstats scan and shipped in the closure, fq cogrouped per part.
+        Rank- and score-identical to the driver route."""
+        return self._search_synonyms(query, synonyms, k, where, True)
 
     def explain_query(self, query: str, *, mode: str = "or",
                       where: str | None = None) -> dict:
@@ -2061,7 +1528,7 @@ class IndexReader:
         boost_field`` (a stored numeric docstore field, NULL → 0), and
         return the top ``k`` under (score desc, doc_id asc).
 
-        Scale shape: candidates come from the distributed WAND walk
+        Scale shape: candidates come from the executor route
         (≤ parts·rerank_k rows to the driver); the rescore joins the
         BROADCAST candidate list against the pruned docstore scan
         (doc_id + one numeric column), so the big side never shuffles.
@@ -2145,10 +1612,10 @@ class IndexReader:
             group_by, "doc_id", "score", "doc_rank")
 
     # Auto-select guards for search(). Primary: estimated FETCH BYTES — the
-    # actual cost of the driver walk is pulling the query terms' packed
+    # actual cost of the driver route is pulling the query terms' packed
     # blocks to one machine, and byte size is what build-time block metadata
     # measures exactly (termstats.bytes = Σ bin_bytes). Past a few MB the
-    # distributed walk's extra job overhead is already amortized and the
+    # executor route's extra job overhead is already amortized and the
     # driver stops being a bandwidth funnel.
     DISTRIBUTED_FETCH_BYTES = 4 << 20
     # Fallback for pre-r4 indexes whose termstats lack the bytes column:
@@ -2161,46 +1628,32 @@ class IndexReader:
         after: tuple[int, float] | None = None,
     ) -> DataFrame:
         """Default query path. ``distributed=None`` auto-selects: the
-        executor-side WAND walk (search_wand_distributed — the cluster-scale
+        executor route (:meth:`search_wand_distributed` — the cluster-scale
         shape, nothing bigger than parts·k rows reaches the driver) unless
         the query's estimated block-fetch volume (from build-time metadata,
-        see :meth:`term_stats`) is small enough that the driver walk is a
+        see :meth:`term_stats`) is small enough that the driver route is a
         cheap fast path. Filtered queries (``where``) ALWAYS route
         distributed: the fq predicate evaluates executor-side there, so the
         visible-id set never funnels through the driver regardless of the
-        predicate's selectivity. Both paths are rank- and score-identical
+        predicate's selectivity. Both routes are rank- and score-identical
         (asserted in tests/test_index.py). The chosen route is recorded in
         ``self.last_path`` ("driver" | "distributed").
 
         ONE termstats scan serves routing AND idf computation — the stats
-        fetched here are passed down to the chosen walk.
+        fetched here are passed down to the chosen route.
 
         ``after`` = the previous page's last (doc_id, score) hit (Solr
         cursorMark / Lucene searchAfter): returns the next ``k`` results
         strictly after it in (score desc, doc_id asc) order — stateless
         deep paging with no ``start`` offset, so page 10^6 costs the same
-        one walk as page 1 (Solr's start=N deep paging materializes N+k
-        candidates per shard; the cursor form is why CursorMark exists)."""
+        one scoring pass as page 1 (Solr's start=N deep paging materializes
+        N+k candidates per shard; the cursor form is why CursorMark
+        exists)."""
         terms = sorted(set(tokenize(query)))
         stats = self.term_stats(terms)
         idfs = {t: self._idf(s["df"]) for t, s in stats.items()}
-        if distributed is None:
-            if where is not None:
-                distributed = True
-            elif all(s["bytes"] is not None for s in stats.values()):
-                est = sum(s["bytes"] for s in stats.values())
-                distributed = est > self.DISTRIBUTED_FETCH_BYTES
-            else:
-                distributed = (sum(s["df"] for s in stats.values())
-                               > self.DISTRIBUTED_POSTINGS_THRESHOLD)
-        self.last_path = "distributed" if distributed else "driver"
-        hits = (
-            self.search_wand_distributed(query, k, mode=mode, where=where,
-                                         _idfs=idfs, after=after)
-            if distributed
-            else self.search_wand(query, k, mode=mode, where=where,
-                                  _idfs=idfs, after=after)
-        )
+        hits = self._search_terms(query, k, mode, where, idfs, after,
+                                  self._route(stats, where, distributed))
         return self.spark.createDataFrame(
             [(int(d), float(s), r + 1) for r, (d, s) in enumerate(hits)],
             "doc_id long, score double, rank int",
@@ -2307,315 +1760,158 @@ def _decode_blocks_compact(positional: bool):
     return kernel
 
 
-def _norm(dl: float, avgdl: float) -> float:
+
+# ---------------------------------------------------------------------------
+# The scoring core.
+#
+# Every query shape is a list of scoring UNITS, each ``(weight, ids, tf_f64,
+# dl_f64)`` contributing weight·tf/(tf + K1·(1 − B + B·dl/avgdl)) at its docs:
+#   * a term: weight = boost·idf, its postings' tf;
+#   * a synonym group (Lucene SynonymQuery): weight = idf of the max member
+#     df, tf = Σ member tfs at the doc;
+#   * a phrase (Lucene PhraseQuery): weight = boost·Σ idf over its tokens
+#     (with multiplicity), tf := pf, the phrase frequency, at the docs where
+#     it matches.
+# ``_vec_topk`` scores all units in one numpy pass over the decoded arrays
+# and selects the exact top-k. Nothing is skipped: no block-max pruning
+# happens today (the blocks' max_tf/dl_min bounds are written at build time
+# but the query path does not read them). For the posting volumes one part
+# bucket holds, the columnar pass is 50-100× cheaper than a per-posting
+# interpreted walk — WAND would have to prune >99% of postings to win.
+#
+# Determinism: each doc's score is an IEEE-754 left fold in a fixed unit
+# order — required groups in caller order (members ascending by term), then
+# optional units ascending by key (a term's key is the term, a phrase's
+# '"tok tok"') — and the top-k tie-break is (score desc, doc_id asc). The
+# driver, per-part and SQL routes run the same functions on the same units,
+# so their hits agree to the bit (asserted, and pinned by golden outputs,
+# in tests/test_index.py). Per-part memory is O(postings of the query's
+# terms in the part), the bound the decode-stream kernels already carry.
+# ---------------------------------------------------------------------------
+
+def _norm(dl, avgdl: float):
+    """BM25 length normalization K(dl) = k1·(1 − b + b·dl/avgdl), for a
+    scalar or an array of doc lengths."""
     return K1 * (1.0 - B + B * dl / avgdl)
 
 
-@dataclass
-class _Cursor:
-    """Posting cursor over one term's sorted block list with lazy decode."""
-
-    term: str
-    idf: float
-    blocks: list
-    avgdl: float
-    bi: int = 0
-    pos: int = 0
-    ids: np.ndarray | None = None
-    tfs: np.ndarray | None = None
-    dls: np.ndarray | None = None
-    exhausted: bool = field(default=False)
-    # positional payload (phrase path) — decoded lazily per block, cached
-    # by block index so repeated occurrences in one block decode once
-    _pos_bi: int = field(default=-1)
-    _pos_flat: np.ndarray | None = field(default=None)
-    _pos_offs: np.ndarray | None = field(default=None)
-
-    def __post_init__(self):
-        self.global_ub = max(
-            self._bound(b["max_tf"], b["dl_min"]) for b in self.blocks
-        )
-        self._load_block()
-
-    def _bound(self, max_tf: int, dl_min: int) -> float:
-        return self.idf * max_tf / (max_tf + _norm(dl_min, self.avgdl))
-
-    def _load_block(self) -> None:
-        if self.bi >= len(self.blocks):
-            self.exhausted = True
-            self.ids = None
-            return
-        b = self.blocks[self.bi]
-        self.ids, self.tfs, self.dls = unpack_block(
-            bytes(b["ids_bin"]), bytes(b["tfs_bin"]), bytes(b["dls_bin"])
-        )
-        self.pos = 0
-
-    @property
-    def cur_doc(self) -> int:
-        if self.exhausted:
-            return 1 << 62
-        return int(self.ids[self.pos])
-
-    def block_ub(self) -> float:
-        if self.exhausted:
-            return 0.0
-        b = self.blocks[self.bi]
-        return self._bound(b["max_tf"], b["dl_min"])
-
-    def block_last(self) -> int:
-        if self.exhausted:
-            return 1 << 62
-        return self.blocks[self.bi]["last_doc_id"]
-
-    def contribution(self) -> float:
-        tf = float(self.tfs[self.pos])
-        dl = float(self.dls[self.pos])
-        return self.idf * tf / (tf + _norm(dl, self.avgdl))
-
-    def cur_positions(self) -> np.ndarray:
-        """Sorted token positions of the CURRENT posting (phrase path;
-        requires blocks fetched with ``with_positions=True``). Decodes the
-        whole block's ``pos_bin`` once and slices per posting — segment
-        boundaries come from the already-decoded tfs (codec layout)."""
-        if self._pos_bi != self.bi:
-            pb = self.blocks[self.bi]["pos_bin"]
-            if pb is None:
-                raise ValueError(
-                    "not a positional index: rebuild with "
-                    "build_index(positions=True) for phrase queries")
-            self._pos_flat, self._pos_offs = unpack_positions(bytes(pb), self.tfs)
-            self._pos_bi = self.bi
-        return self._pos_flat[self._pos_offs[self.pos]:self._pos_offs[self.pos + 1]]
-
-    def advance(self) -> None:
-        self.pos += 1
-        if self.pos >= len(self.ids):
-            self.bi += 1
-            self._load_block()
-
-    def next_geq(self, target: int) -> None:
-        """Skip blocks whose last_doc_id < target (no decode), then binary
-        search within the landing block."""
-        if self.exhausted:
-            return
-        if self.blocks[self.bi]["last_doc_id"] < target:
-            lo, hi = self.bi + 1, len(self.blocks)
-            while lo < hi:
-                mid = (lo + hi) // 2
-                if self.blocks[mid]["last_doc_id"] < target:
-                    lo = mid + 1
-                else:
-                    hi = mid
-            self.bi = lo
-            self._load_block()
-            if self.exhausted:
-                return
-        self.pos = int(np.searchsorted(self.ids, target, side="left"))
-        if self.pos >= len(self.ids):
-            self.bi += 1
-            self._load_block()
+def _by_term(recs) -> dict[str, list]:
+    """Block records (Rows or dicts) → ``{term: blocks sorted by
+    first_doc_id}`` — the input every local top-k takes."""
+    by_term: dict[str, list] = {}
+    for r in recs:
+        by_term.setdefault(r["term"], []).append(r)
+    for blocks in by_term.values():
+        blocks.sort(key=lambda r: r["first_doc_id"])
+    return by_term
 
 
-class _PhraseCursor:
-    """Cursor adapter that lets a phrase clause ride the boolean walks as
-    if it were a single term — the scorer-tree composition Lucene performs
-    when a PhraseQuery sits inside a BooleanQuery. ``cur_doc`` only ever
-    lands on docs where the phrase MATCHES (pf > 0 under the slop
-    contract): internally a conjunctive leapfrog over the member terms'
-    cursors (the same loop as :func:`_phrase_topk`) with position
-    verification at aligned docs, so docs failing the AND prefilter or the
-    position check are invisible to the outer walk. ``contribution`` =
-    boost · (Σ idf with multiplicity) · pf/(pf + K(dl)) — identical to
-    :meth:`IndexReader.search_phrase` scoring, so a lone required phrase
-    through this adapter equals the dedicated phrase walk (asserted in
-    tests). Exposes the subset of the `_Cursor` interface the non-pruning
-    walks use (cur_doc / exhausted / next_geq / advance / contribution /
-    term); it provides NO block-max bounds, which is why mixed queries run
-    the grouped or plain-OR walk rather than WAND."""
-
-    def __init__(self, terms: list[str], idfs: dict[str, float],
-                 by_term: dict[str, list], avgdl: float,
-                 slop: int = 0, boost: float = 1.0):
-        self.term = '"' + " ".join(terms) + '"'  # walk sort key
-        self.terms = list(terms)
-        self.avgdl = avgdl
-        self.slop = slop
-        self.idf_sum = boost * sum(idfs[t] for t in terms)  # w/ multiplicity
-        uniq = sorted(set(terms))
-        self.cursors = {t: _Cursor(t, idfs[t], by_term[t], avgdl)
-                        for t in uniq}
-        self._cs = list(self.cursors.values())
-        self.exhausted = False
-        self._doc = 0
-        self._pf = 0
-        self._dl = 0.0
-        self._align(0)
-
-    @property
-    def cur_doc(self) -> int:
-        return (1 << 62) if self.exhausted else self._doc
-
-    def _align(self, target: int) -> None:
-        cs = self._cs
-        while True:
-            if any(c.exhausted for c in cs):
-                self.exhausted = True
-                return
-            t = max(target, max(c.cur_doc for c in cs))
-            for c in cs:
-                if c.cur_doc < t:
-                    c.next_geq(t)
-            if any(c.exhausted for c in cs):
-                self.exhausted = True
-                return
-            if all(c.cur_doc == t for c in cs):
-                pf = _phrase_freq(self.terms, self.cursors, self.slop)
-                if pf:
-                    c0 = cs[0]
-                    self._doc, self._pf = t, pf
-                    self._dl = float(c0.dls[c0.pos])
-                    return
-                for c in cs:
-                    c.advance()
-
-    def next_geq(self, target: int) -> None:
-        if not self.exhausted and self._doc < target:
-            self._align(target)
-
-    def advance(self) -> None:
-        if self.exhausted:
-            return
-        for c in self._cs:  # all members sit aligned at the match doc
-            c.advance()
-        self._align(0)
-
-    def contribution(self) -> float:
-        return (self.idf_sum * self._pf
-                / (self._pf + _norm(self._dl, self.avgdl)))
+def _decode_term_arrays(blocks: list, positions: bool = False) -> tuple:
+    """One term's sorted block list → (ids, tf_f64, dl_f64), plus the flat
+    position array (each posting's tf positions, postings in doc order)
+    when ``positions``."""
+    cols = [unpack_block(bytes(b["ids_bin"]), bytes(b["tfs_bin"]),
+                         bytes(b["dls_bin"])) for b in blocks]
+    ids, tfs, dls = (np.concatenate(c) for c in zip(*cols))
+    out = (ids, tfs.astype(np.float64), dls.astype(np.float64))
+    if positions:
+        out += (np.concatenate([unpack_positions(bytes(b["pos_bin"]), c[1])[0]
+                                for b, c in zip(blocks, cols)]),)
+    return out
 
 
-class _SynCursor:
-    """Lucene SynonymQuery scorer over a group of term cursors: the group
-    behaves as ONE pseudo-term — tf at a doc is the SUM of member tfs, the
-    idf comes from max member df (SynonymQuery's docFreq blend), so a doc
-    matching any member scores once, not per member. Exposes the exact
-    merge interface (_or_topk / the grouped walks): cur_doc / exhausted /
-    advance / contribution / term."""
-
-    def __init__(self, members: list[_Cursor], idf: float, avgdl: float,
-                 name: str):
-        self.members = members
-        self.idf = idf
-        self.avgdl = avgdl
-        self.term = name  # deterministic summation order key
-
-    @property
-    def exhausted(self) -> bool:
-        return all(m.exhausted for m in self.members)
-
-    @property
-    def cur_doc(self) -> int:
-        return min(m.cur_doc for m in self.members)
-
-    def contribution(self) -> float:
-        doc = self.cur_doc
-        tf = 0.0
-        dl = None
-        for m in self.members:
-            if not m.exhausted and m.cur_doc == doc:
-                tf += float(m.tfs[m.pos])
-                dl = float(m.dls[m.pos])
-        return self.idf * tf / (tf + _norm(dl, self.avgdl))
-
-    def advance(self) -> None:
-        doc = self.cur_doc
-        for m in self.members:
-            if not m.exhausted and m.cur_doc == doc:
-                m.advance()
-
-
-def _in_sorted(arr: np.ndarray | None, doc: int) -> bool:
-    if arr is None or not len(arr):
-        return False
-    i = int(np.searchsorted(arr, doc))
-    return i < len(arr) and int(arr[i]) == doc
-
-
-# ---------------------------------------------------------------------------
-# Vectorized exact scorer (r6): the columnar twin of the cursor walks.
-#
-# The doc-at-a-time Python walks below pay interpreter cost per POSTING
-# (~µs each); for the posting volumes a part bucket holds, one numpy pass
-# over the decoded arrays is 50-100× cheaper even though it skips nothing —
-# WAND's skipping would have to prune >99% of postings to win at that cost
-# ratio, which hot/mixed query mixes never reach. Every walk below therefore
-# DISPATCHES to this kernel whenever its inputs are plain term cursors (or
-# synonym groups, which merge exactly); phrase adapters keep the cursor
-# loops (their match set depends on position verification).
-#
-# Result identity is by construction, not approximation:
-#   * contributions use the same float64 expression, and each doc's score
-#     accumulates in the SAME order as the walks (ascending term within a
-#     group/should list, groups in caller order, shoulds last) — an exact
-#     IEEE-754 left-fold match, asserted against the cursor walks in
-#     tests/test_index.py;
-#   * the masks (deleted / allowed / cursor-paging `after`) and the
-#     (score desc, doc_id asc) top-k tie-break replicate `offer()`.
-# Per-part memory is O(postings of the query's terms in the part) — the
-# same bound the decode-stream kernels already carry at scale.
-# ---------------------------------------------------------------------------
-
-def _decode_term_arrays(blocks: list) -> tuple:
-    """One term's sorted block list → (ids, tf_f64, dl_f64) arrays."""
-    ids_l, tfs_l, dls_l = [], [], []
-    for b in blocks:
-        i, t, d = unpack_block(
-            bytes(b["ids_bin"]), bytes(b["tfs_bin"]), bytes(b["dls_bin"]))
-        ids_l.append(i)
-        tfs_l.append(t)
-        dls_l.append(d)
-    return (np.concatenate(ids_l),
-            np.concatenate(tfs_l).astype(np.float64),
-            np.concatenate(dls_l).astype(np.float64))
-
-
-def _cursor_unit(c: "_Cursor") -> tuple:
-    """Decode a plain cursor's FULL block list to scoring arrays:
-    (idf, ids, tf_f64, dl_f64)."""
-    return (c.idf, *_decode_term_arrays(c.blocks))
-
-
-def _syn_unit(c: "_SynCursor") -> tuple:
-    """Merge a synonym group to one pseudo-term unit: tf at a doc is the
-    SUM of member tfs (integer-valued floats — order-independent exact),
-    dl is the doc's length (identical across members by construction)."""
-    parts = [_cursor_unit(m) for m in c.members]
-    ids_c = np.concatenate([p[1] for p in parts])
-    tfs_c = np.concatenate([p[2] for p in parts])
-    dls_c = np.concatenate([p[3] for p in parts])
+def _syn_unit(idf: float, members: list[tuple]) -> tuple:
+    """Merge a synonym group's member arrays into one pseudo-term unit: tf
+    at a doc is the SUM of member tfs (integer-valued floats — exact in any
+    order), dl is the doc's length (identical across members)."""
+    ids_c = np.concatenate([m[0] for m in members])
     uids, inv = np.unique(ids_c, return_inverse=True)
     tf_sum = np.zeros(len(uids))
-    np.add.at(tf_sum, inv, tfs_c)
+    np.add.at(tf_sum, inv, np.concatenate([m[1] for m in members]))
     dl_u = np.zeros(len(uids))
-    dl_u[inv] = dls_c
-    return (c.idf, uids, tf_sum, dl_u)
+    dl_u[inv] = np.concatenate([m[2] for m in members])
+    return (idf, uids, tf_sum, dl_u)
+
+
+def _phrase_unit(toks: list[str], by_term: dict[str, list], slop: int,
+                 weight: float) -> tuple | None:
+    """A phrase as one scoring unit ``(weight, ids, pf_f64, dl_f64)`` over
+    the docs where it matches; None when a member term has no postings
+    here (the phrase cannot occur).
+
+    ``slop=0`` (exact, Lucene PhraseQuery): pf = the number of start
+    positions p with toks[i] at p+i for every slot i. ``slop>0``: ORDERED
+    near-match — Lucene SpanNearQuery(inOrder=true, slop), not classic
+    PhraseQuery's transposing sloppy scorer (documented deviation; the
+    classic parser's ``"a b"~N`` maps here). A start q of toks[0] matches
+    iff the GREEDY chain (each next token at its smallest position strictly
+    after the previous slot's) spans ≤ slop intervening positions:
+    p_last − q − (m−1) ≤ slop. Greedy minimizes the final position for a
+    given start, so it decides existence exactly; pf counts matching starts
+    unweighted (vs Lucene's 1/(distance+1) weighting).
+
+    Vectorized over all docs at once: positions of the docs holding every
+    distinct token become keys ``doc_rank·span + pos`` (span exceeds every
+    position plus the phrase length, so no two docs' keys meet, even after
+    the slot shift). Exact phrases intersect the slot-shifted keys; sloppy
+    ones run the greedy chain as one ``searchsorted`` per slot with a
+    same-doc check."""
+    uniq = sorted(set(toks))
+    if any(t not in by_term for t in uniq):
+        return None
+    arrs = {t: _decode_term_arrays(by_term[t], positions=True) for t in uniq}
+    common = arrs[uniq[0]][0]
+    for t in uniq[1:]:
+        common = np.intersect1d(common, arrs[t][0], assume_unique=True)
+    if not len(common):
+        return (weight, common, np.zeros(0), np.zeros(0))
+    span = max(int(a[3].max()) for a in arrs.values()) + len(toks) + 1
+    keys = {}
+    for t, (ids, tfs, _, pos) in arrs.items():
+        rank = np.searchsorted(common, ids)
+        inside = np.repeat(common[np.minimum(rank, len(common) - 1)] == ids,
+                           tfs.astype(np.int64))
+        keys[t] = (np.repeat(rank, tfs.astype(np.int64))[inside] * span
+                   + pos[inside])
+    starts = keys[toks[0]]
+    if slop == 0:
+        for i, t in enumerate(toks[1:], 1):
+            starts = np.intersect1d(starts, keys[t] - i, assume_unique=True)
+    else:
+        prev, alive = starts, np.ones(len(starts), dtype=bool)
+        for t in toks[1:]:
+            p = keys[t]
+            nxt = p[np.minimum(np.searchsorted(p, prev, side="right"),
+                               len(p) - 1)]
+            ok = (nxt > prev) & (nxt // span == prev // span)
+            alive &= ok
+            prev = np.where(ok, nxt, prev)
+        starts = starts[alive & (prev - starts - (len(toks) - 1) <= slop)]
+    pf = np.bincount(starts // span, minlength=len(common))
+    hit = np.flatnonzero(pf)
+    ids0, _, dls0, _ = arrs[uniq[0]]
+    return (weight, common[hit], pf[hit].astype(np.float64),
+            dls0[np.searchsorted(ids0, common[hit])])
 
 
 def _vec_topk(
     groups: list[list[tuple]], shoulds: list[tuple], k: int, avgdl: float,
     deleted: np.ndarray | None = None, allowed: np.ndarray | None = None,
     after: tuple[int, float] | None = None, min_should_match: int = 0,
-    min_match: int | None = None,
 ) -> list[tuple[int, float]]:
-    """Exact top-k over scoring units (see module comment above).
+    """Exact top-k over scoring units (see the section comment above).
 
     ``groups``: required at-least-one-of unit groups, in accumulation
     order (members already ordered); ``shoulds``: optional units, in
-    accumulation order. ``min_match`` gates on the number of PRESENT
-    should units (the _or_topk contract); ``min_should_match`` is the
-    boolean walk's Lucene mm gate. Returns [(doc_id, score)] under
-    (score desc, doc_id asc)."""
+    accumulation order — a doc matches iff it is in every group (or, with
+    no groups, in any should unit) and in at least ``min_should_match``
+    should units (Lucene's minimumNumberShouldMatch). ``deleted``: sorted
+    tombstoned / prohibited doc_ids; ``allowed``: optional sorted
+    visibility allowlist (the fq surface); ``after``: cursor-paging mark —
+    the previous page's last ``(doc_id, score)`` hit (Lucene
+    ``searchAfter`` / Solr cursorMark): only docs STRICTLY after it in
+    result order are admitted, so consecutive pages partition the ranking.
+    Returns [(doc_id, score)] under (score desc, doc_id asc)."""
     all_ids = [u[1] for g in groups for u in g] + [u[1] for u in shoulds]
     all_ids = [a for a in all_ids if len(a)]
     if not all_ids or k <= 0:
@@ -2623,26 +1919,18 @@ def _vec_topk(
     universe = np.unique(np.concatenate(all_ids))
     score = np.zeros(len(universe))
     ok = np.ones(len(universe), dtype=bool)
-
-    def _contrib(idf, tfs, dls):
-        # EXACTLY _Cursor.contribution()'s expression shape:
-        # idf * tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
-        return (idf * tfs) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-
     for g in groups:
         gpresent = np.zeros(len(universe), dtype=bool)
         for (idf, ids, tfs, dls) in g:
             idx = np.searchsorted(universe, ids)
-            score[idx] += _contrib(idf, tfs, dls)
+            score[idx] += (idf * tfs) / (tfs + _norm(dls, avgdl))
             gpresent[idx] = True
         ok &= gpresent
     scount = np.zeros(len(universe), dtype=np.int64)
     for (idf, ids, tfs, dls) in shoulds:
         idx = np.searchsorted(universe, ids)
-        score[idx] += _contrib(idf, tfs, dls)
+        score[idx] += (idf * tfs) / (tfs + _norm(dls, avgdl))
         scount[idx] += 1
-    if min_match is not None:
-        ok &= scount >= min_match
     if min_should_match:
         ok &= scount >= min_should_match
     if deleted is not None and len(deleted):
@@ -2666,369 +1954,108 @@ def _vec_topk(
     return [(int(universe[cand[i]]), float(cs[i])) for i in order]
 
 
-def _vec_ok(cursors) -> bool:
-    return all(type(c) is _Cursor for c in cursors)
-
-
-def _vec_or_units(cursors) -> list[tuple] | None:
-    """Units for a should/OR list that may mix plain and synonym cursors
-    (ascending .term order — the walks' accumulation order); None if any
-    member is a phrase adapter (position-dependent: cursor walk only).
-    Type-checks the WHOLE list before decoding anything, so a mixed list
-    costs nothing here."""
-    if not all(type(c) in (_Cursor, _SynCursor) for c in cursors):
-        return None
-    return [
-        _cursor_unit(c) if type(c) is _Cursor else _syn_unit(c)
-        for c in sorted(cursors, key=lambda c: c.term)
-    ]
-
-
-def _and_topk(
-    cursors: list[_Cursor], k: int, n_required: int,
-    deleted: np.ndarray | None = None, allowed: np.ndarray | None = None,
-    after: tuple[int, float] | None = None,
+def _local_clauses(
+    by_term: dict[str, list], deleted: np.ndarray | None,
+    allowed: np.ndarray | None, *, spec, idfs: dict[str, float], k: int,
+    avgdl: float, mm: int = 0, after: tuple[int, float] | None = None,
 ) -> list[tuple[int, float]]:
-    """Conjunctive (pure-AND) exact top-k: leapfrog intersection of the
-    term cursors, BM25-scored, (score desc, doc_id asc) tie-break.
+    """Exact local top-k of one clause tree over a ``term → sorted blocks``
+    map — the scorer behind the term (or/and), boolean, grouped, phrase and
+    mixed query shapes, run unchanged by the driver route, the per-part
+    executor route and the SQL surface (same spec in → bit-identical hits
+    out).
 
-    ``n_required`` is the number of query terms that exist in the INDEX
-    (globally): a caller holding cursors for fewer terms (e.g. one part
-    bucket of a distributed walk where a term has no postings) can match
-    nothing, keeping per-part results exact. ``after``: the previous
-    page's last ``(doc_id, score)`` hit (see :func:`_wand_topk`)."""
-    if k <= 0 or n_required <= 0 or len(cursors) < n_required:
-        return []
-    if _vec_ok(cursors):
-        # conjunctive = every term its own required singleton group, in
-        # ascending-term order (the walk's per-doc summation order)
-        groups = [[_cursor_unit(c)]
-                  for c in sorted(cursors, key=lambda c: c.term)]
-        return _vec_topk(groups, [], k, cursors[0].avgdl,
-                         deleted=deleted, allowed=allowed, after=after)
-    heap: list[tuple[float, int]] = []
-    after_item = (after[1], -after[0]) if after is not None else None
-
-    def offer(doc: int, score: float) -> None:
-        if _in_sorted(deleted, doc):
-            return
-        if allowed is not None and not _in_sorted(allowed, doc):
-            return
-        item = (score, -doc)
-        if after_item is not None and item >= after_item:
-            return  # at or before the page cursor: already served
-        if len(heap) < k:
-            heapq.heappush(heap, item)
-        elif item > heap[0]:
-            heapq.heapreplace(heap, item)
-
-    while True:
-        if any(c.exhausted for c in cursors):
-            break
-        target = max(c.cur_doc for c in cursors)
-        for c in cursors:
-            if c.cur_doc < target:
-                c.next_geq(target)
-        if any(c.exhausted for c in cursors):
-            break
-        if all(c.cur_doc == target for c in cursors):
-            score = 0.0
-            for c in sorted(cursors, key=lambda c: c.term):
-                score += c.contribution()
-            offer(target, score)
-            for c in cursors:
-                c.advance()
-
-    out = sorted(heap, key=lambda it: (-it[0], -it[1]))
-    return [(-d, s) for s, d in out]
-
-
-def _boolean_topk(
-    must: list["_Cursor"], should: list["_Cursor"], k: int,
-    n_required: int, deleted: np.ndarray | None = None,
-    allowed: np.ndarray | None = None, min_should_match: int = 0,
-) -> list[tuple[int, float]]:
-    """Mixed MUST/SHOULD exact top-k (Lucene BooleanQuery under BM25):
-    leapfrog intersection over the MUST cursors defines the match set;
-    SHOULD cursors are forward-only riders that add their contribution
-    whenever they align with a matched doc (they gate matching only when
-    ``min_should_match`` > 0 — Lucene's minimumNumberShouldMatch: a doc
-    must additionally align ≥ that many SHOULD cursors). MUST_NOT is
-    handled upstream by merging the prohibited ids into ``deleted``.
-    Same (score desc, doc_id asc) tie-break as every walk."""
-    if k <= 0 or n_required <= 0 or len(must) < n_required:
-        return []
-    if min_should_match > len(should):
-        return []  # fewer optional clauses than required matches
-    if _vec_ok(must) and _vec_ok(should):
-        groups = [[_cursor_unit(c)]
-                  for c in sorted(must, key=lambda c: c.term)]
-        shoulds = [_cursor_unit(c)
-                   for c in sorted(should, key=lambda c: c.term)]
-        return _vec_topk(groups, shoulds, k, must[0].avgdl,
-                         deleted=deleted, allowed=allowed,
-                         min_should_match=min_should_match)
-    heap: list[tuple[float, int]] = []
-
-    def offer(doc: int, score: float) -> None:
-        if _in_sorted(deleted, doc):
-            return
-        if allowed is not None and not _in_sorted(allowed, doc):
-            return
-        item = (score, -doc)
-        if len(heap) < k:
-            heapq.heappush(heap, item)
-        elif item > heap[0]:
-            heapq.heapreplace(heap, item)
-
-    should_sorted = sorted(should, key=lambda c: c.term)
-    while True:
-        if any(c.exhausted for c in must):
-            break
-        target = max(c.cur_doc for c in must)
-        for c in must:
-            if c.cur_doc < target:
-                c.next_geq(target)
-        if any(c.exhausted for c in must):
-            break
-        if all(c.cur_doc == target for c in must):
-            score = 0.0
-            matched_should = 0
-            for c in sorted(must, key=lambda c: c.term):
-                score += c.contribution()
-            for c in should_sorted:
-                if not c.exhausted and c.cur_doc < target:
-                    c.next_geq(target)
-                if not c.exhausted and c.cur_doc == target:
-                    score += c.contribution()
-                    matched_should += 1
-            if matched_should >= min_should_match:
-                offer(target, score)
-            for c in must:
-                c.advance()
-
-    out = sorted(heap, key=lambda it: (-it[0], -it[1]))
-    return [(-d, s) for s, d in out]
-
-
-def _grouped_topk(
-    groups: list[list["_Cursor"]], should: list["_Cursor"], k: int,
-    deleted: np.ndarray | None = None, allowed: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """Generalized MUST walk for expanded multi-term clauses (wildcard /
-    fuzzy): each group is an at-least-one-of disjunction and EVERY group
-    must be satisfied — the match set is ∩_g (∪_{t∈g} postings(t)), i.e.
-    Lucene's ``+(a b c)`` nested-BooleanQuery shape after a MultiTermQuery
-    rewrite. A plain MUST term is a singleton group, so this walk strictly
-    generalizes :func:`_boolean_topk`'s intersection.
-
-    Leapfrog over VIRTUAL group cursors: a group's current doc is the min
-    over its members (exhausted members report the sentinel); lagging
-    groups ``next_geq`` to the max. At an aligned doc the score sums every
-    aligned member's contribution (members sorted by term within a group,
-    groups in caller order — the fixed float-summation order the
-    determinism discipline requires), plus SHOULD riders exactly as in
-    :func:`_boolean_topk`. MUST_NOT is handled upstream via ``deleted``.
-    Same (score desc, doc_id asc) tie-break as every walk."""
-    if k <= 0 or not groups or any(not g for g in groups):
-        return []
-    if all(_vec_ok(g) for g in groups) and _vec_ok(should):
-        # groups in caller order, members ascending-term within each, then
-        # should riders ascending-term — the walk's exact summation order
-        vg = [[_cursor_unit(c) for c in sorted(g, key=lambda c: c.term)]
-              for g in groups]
-        vs = [_cursor_unit(c) for c in sorted(should, key=lambda c: c.term)]
-        return _vec_topk(vg, vs, k, groups[0][0].avgdl,
-                         deleted=deleted, allowed=allowed)
-    heap: list[tuple[float, int]] = []
-
-    def offer(doc: int, score: float) -> None:
-        if _in_sorted(deleted, doc):
-            return
-        if allowed is not None and not _in_sorted(allowed, doc):
-            return
-        item = (score, -doc)
-        if len(heap) < k:
-            heapq.heappush(heap, item)
-        elif item > heap[0]:
-            heapq.heapreplace(heap, item)
-
-    def g_doc(g: list["_Cursor"]) -> int:
-        return min(c.cur_doc for c in g)  # exhausted → sentinel 1 << 62
-
-    sentinel = 1 << 62
-    should_sorted = sorted(should, key=lambda c: c.term)
-    while True:
-        target = max(g_doc(g) for g in groups)
-        if target >= sentinel:
-            break  # some group fully exhausted: no further matches
-        aligned = True
-        for g in groups:
-            for c in g:
-                if not c.exhausted and c.cur_doc < target:
-                    c.next_geq(target)
-            if g_doc(g) != target:
-                aligned = False
-        if not aligned:
-            continue  # next_geq strictly advanced a group past target
-        score = 0.0
-        for g in groups:
-            for c in sorted(g, key=lambda c: c.term):
-                if not c.exhausted and c.cur_doc == target:
-                    score += c.contribution()
-        for c in should_sorted:
-            if not c.exhausted and c.cur_doc < target:
-                c.next_geq(target)
-            if not c.exhausted and c.cur_doc == target:
-                score += c.contribution()
-        offer(target, score)
-        for g in groups:
-            for c in g:
-                if not c.exhausted and c.cur_doc == target:
-                    c.advance()
-
-    out = sorted(heap, key=lambda it: (-it[0], -it[1]))
-    return [(-d, s) for s, d in out]
-
-
-def _or_topk(
-    cursors: list, k: int,
-    deleted: np.ndarray | None = None, allowed: np.ndarray | None = None,
-    min_match: int = 1, after: tuple[int, float] | None = None,
-) -> list[tuple[int, float]]:
-    """Exact disjunctive top-k WITHOUT block-max pruning: the walk for
-    should-only clause mixes that include phrase cursors (which provide no
-    block bounds, so WAND would be unsound) and for
-    ``min_should_match`` > 1 term queries (Lucene's
-    MinShouldMatchSumScorer shape: a doc needs ≥ ``min_match`` aligned
-    cursors to match). Doc-at-a-time min-merge over all live cursors;
-    contributions summed in ascending ``.term`` order (the determinism
-    discipline). Every candidate is evaluated — exact by construction,
-    and the cost is bounded by the clauses' postings like the exhaustive
-    scorer's."""
-    if k <= 0 or min_match > len(cursors):
-        return []
-    units = _vec_or_units(cursors) if cursors else []
-    if units is not None:
-        return _vec_topk([], units, k, cursors[0].avgdl if cursors else 0.0,
-                         deleted=deleted, allowed=allowed, after=after,
-                         min_match=min_match)
-    heap: list[tuple[float, int]] = []
-    after_item = (after[1], -after[0]) if after is not None else None
-
-    def offer(doc: int, score: float) -> None:
-        if _in_sorted(deleted, doc):
-            return
-        if allowed is not None and not _in_sorted(allowed, doc):
-            return
-        item = (score, -doc)
-        if after_item is not None and item >= after_item:
-            return  # at or before the page cursor: already served
-        if len(heap) < k:
-            heapq.heappush(heap, item)
-        elif item > heap[0]:
-            heapq.heapreplace(heap, item)
-
-    order = sorted(cursors, key=lambda c: c.term)
-    while True:
-        live = [c for c in order if not c.exhausted]
-        if not live:
-            break
-        doc = min(c.cur_doc for c in live)
-        at_doc = [c for c in live if c.cur_doc == doc]
-        if len(at_doc) >= min_match:
-            offer(doc, sum(c.contribution() for c in at_doc))
-        for c in at_doc:
-            c.advance()
-
-    out = sorted(heap, key=lambda it: (-it[0], -it[1]))
-    return [(-d, s) for s, d in out]
-
-
-def _drain_phrase_ids(pc: "_PhraseCursor") -> np.ndarray:
-    """All doc ids a phrase matches (its cursor only lands on pf>0 docs) —
-    the exclusion set of a prohibited phrase, computed WHERE THE WALK RUNS
-    exactly like MUST_NOT terms' ids-only decode."""
-    ids = []
-    while not pc.exhausted:
-        ids.append(pc.cur_doc)
-        pc.advance()
-    return np.array(ids, dtype=np.int64)
-
-
-def _mixed_walk(
-    by_term: dict[str, list], base_idfs: dict[str, float], avgdl: float,
-    term_groups: list[tuple[list[str], float]],
-    should_terms: list[tuple[str, float]],
-    phrases: list[tuple[list[str], bool, float, int]],
-    k: int,
-    deleted: np.ndarray | None, allowed: np.ndarray | None,
-    not_phrases: list[tuple[list[str], int]] = (),
-) -> list[tuple[int, float]]:
-    """Build cursors from decoded-block lists and run the right walk for a
-    MIXED clause set (terms + phrases) — the one scorer-tree composition
-    shared by the driver path, the per-part distributed kernel and the SQL
-    surface's worker (same spec in → bit-identical hits out).
-
-    ``term_groups`` = MUST at-least-one-of groups (plain MUST terms arrive
-    as singletons); ``should_terms`` = (term, boost) riders; ``phrases`` =
-    (tokens, required?, boost, slop) clauses wrapped in
-    :class:`_PhraseCursor` (required → their own singleton group, optional
-    → riders). A required clause with no member present here returns ∅ —
-    globally that is Lucene's MatchNoDocs; per part it correctly yields an
-    empty local top-k. Any MUST clause present → grouped walk; otherwise
-    the non-pruning OR walk (phrase cursors carry no block-max bounds).
-    ``not_phrases`` = (tokens, slop) prohibited phrases: their match ids
-    are drained into the deleted set here (where the walk runs — the
-    exclusion set never crosses the network, like MUST_NOT terms); a
-    prohibited phrase missing a member term here excludes nothing."""
+    ``spec = (term_groups, should_terms, must_not, phrases, not_phrases)``:
+    ``term_groups`` = [(terms, boost)] required at-least-one-of groups (a
+    plain MUST term is a singleton); ``should_terms`` = [(term, boost)]
+    optional riders; ``must_not`` = prohibited terms, their ids decoded
+    (ids-only) into the deleted set HERE, where the scorer runs, so the
+    exclusion set never crosses the network; ``phrases`` = [(tokens,
+    required, boost, slop)] phrase units (required → their own group,
+    optional → riders); ``not_phrases`` = [(tokens, slop)] prohibited
+    phrases, their match ids excluded likewise. ``idfs`` are the unboosted
+    idfs of the scored terms; a unit's weight is idf·boost. A required
+    clause with no member present here returns ∅ — globally that is
+    Lucene's MatchNoDocs, per part an empty local top-k. ``mm`` is
+    Lucene's minimumNumberShouldMatch over the riders; ``after`` pages as
+    in :func:`_vec_topk`."""
+    term_groups, should_terms, must_not, phrases, not_phrases = spec
+    deleted = _merge_deleted(deleted, _excluded_ids(
+        [r for t in must_not for r in by_term.get(t, [])]))
     for toks, slop in not_phrases:
-        uniq = sorted(set(toks))
-        if any(t not in by_term for t in uniq):
-            continue  # phrase cannot occur: nothing to exclude
-        zero_idfs = {t: 0.0 for t in uniq}  # exclusions never score
-        pc = _PhraseCursor(toks, zero_idfs, by_term, avgdl, slop=slop)
-        deleted = _merge_deleted(deleted, _drain_phrase_ids(pc))
-    groups: list[list] = []
+        unit = _phrase_unit(toks, by_term, slop, 0.0)
+        if unit is not None:
+            deleted = _merge_deleted(deleted, unit[1])
+
+    def term_unit(t, b):
+        return (idfs[t] * b, *_decode_term_arrays(by_term[t]))
+
+    live = set(by_term) & set(idfs)
+    groups = []
     for g, b in term_groups:
-        cs = [_Cursor(t, base_idfs[t] * b, by_term[t], avgdl)
-              for t in g if t in by_term and t in base_idfs]
-        if not cs:
+        members = [term_unit(t, b) for t in sorted(g) if t in live]
+        if not members:
             return []
-        groups.append(cs)
-    riders: list = [
-        _Cursor(t, base_idfs[t] * b, by_term[t], avgdl)
-        for t, b in should_terms if t in by_term and t in base_idfs
-    ]
+        groups.append(members)
+    riders = [(t, term_unit(t, b)) for t, b in should_terms if t in live]
     for toks, required, b, slop in phrases:
-        uniq = sorted(set(toks))
-        if any(t not in by_term or t not in base_idfs for t in uniq):
+        unit = (_phrase_unit(toks, by_term, slop,
+                             b * sum(idfs[t] for t in toks))
+                if all(t in idfs for t in toks) else None)
+        if unit is None:
             if required:
                 return []
-            continue
-        pc = _PhraseCursor(toks, base_idfs, by_term, avgdl,
-                           slop=slop, boost=b)
-        if required:
-            groups.append([pc])
+        elif required:
+            groups.append([unit])
         else:
-            riders.append(pc)
-    if groups:
-        return _grouped_topk(groups, riders, k, deleted=deleted,
-                             allowed=allowed)
-    return _or_topk(riders, k, deleted=deleted, allowed=allowed)
+            riders.append(('"' + " ".join(toks) + '"', unit))
+    riders.sort(key=lambda r: r[0])
+    return _vec_topk(groups, [u for _, u in riders], k, avgdl,
+                     deleted=deleted, allowed=allowed, after=after,
+                     min_should_match=mm)
+
+
+def _local_synonyms(
+    by_term: dict[str, list], deleted: np.ndarray | None,
+    allowed: np.ndarray | None, *, groups: list[tuple[str, list[str], float]],
+    k: int, avgdl: float,
+) -> list[tuple[int, float]]:
+    """Exact local top-k of a synonym query: ``groups`` = [(name, member
+    terms, idf)], each ONE optional unit (:func:`_syn_unit`) scored in
+    ascending-name order; a group with no member present here contributes
+    nothing."""
+    units = []
+    for _, members, idf in sorted(groups, key=lambda g: g[0]):
+        live = [m for m in members if m in by_term]
+        if live:
+            units.append(_syn_unit(
+                idf, [_decode_term_arrays(by_term[m]) for m in live]))
+    return _vec_topk([], units, k, avgdl, deleted=deleted, allowed=allowed)
+
+
+def _terms_spec(terms: list[str], mode: str) -> tuple:
+    """A plain term query as a clause spec: ``or`` = every term an
+    optional rider, ``and`` = every term its own required group (strict
+    Lucene +required: a term absent from the index matches nothing)."""
+    if mode == "and":
+        return ([([t], 1.0) for t in terms], [], [], [], [])
+    if mode != "or":
+        raise ValueError(f"unknown mode: {mode!r}")
+    return ([], [(t, 1.0) for t in terms], [], [], [])
 
 
 def _mixed_spec(p, expansions):
-    """ParsedQuery + its expanded multi-term clauses → the mixed-walk spec
-    ``(term_groups, should_terms, must_not, phrases)`` shared by
-    ``IndexReader.search_lucene`` and the SQL surface (same spec in →
-    bit-identical hits out of :func:`_mixed_walk`). Plain MUST terms become
-    sorted singleton groups (dedup first-boost-wins); MUST expansions keep
-    parse order after them; SHOULD terms/expansions dedup first-boost-wins
-    and drop terms already gating a group (the same rule the non-phrase
-    grouped path applies); prohibited phrases pass through as
-    (tokens, slop) exclusions. Returns ``None`` when an empty MUST
-    expansion makes the whole query MatchNoDocs."""
+    """ParsedQuery + its expanded multi-term clauses → the clause spec
+    ``(term_groups, should_terms, must_not, phrases, not_phrases)`` of a
+    query with phrase clauses, shared by ``IndexReader.search_lucene`` and
+    the SQL surface (same spec in → bit-identical hits out of
+    :func:`_local_clauses`). Plain MUST terms become sorted singleton
+    groups (dedup first-boost-wins); MUST expansions keep parse order after
+    them; SHOULD terms/expansions dedup first-boost-wins and drop terms
+    already gating a group (the same rule the non-phrase grouped path
+    applies); prohibited phrases pass through as (tokens, slop)
+    exclusions. Returns ``None`` when an empty MUST expansion makes the
+    whole query MatchNoDocs."""
     must_not = list(p.must_not)
     should: list[tuple[str, float]] = list(p.should)
     exp_groups: list[tuple[list[str], float]] = []
@@ -3073,218 +2100,3 @@ def _merge_deleted(a: np.ndarray | None, b: np.ndarray) -> np.ndarray | None:
     if a is None or not len(a):
         return b
     return np.union1d(a, b)
-
-
-def _phrase_freq(terms: list[str], cursors: dict[str, "_Cursor"],
-                 slop: int = 0) -> int:
-    """Phrase frequency at the doc all cursors are aligned on.
-
-    ``slop=0`` (exact, Lucene PhraseQuery): the count of start positions p
-    with term_i at p+i for every phrase slot — an intersection of the
-    slot-shifted (sorted, unique) position lists, short-circuit on empty.
-
-    ``slop>0`` (sloppy): ORDERED near-match semantics — Lucene
-    SpanNearQuery(inOrder=true, slop) rather than classic PhraseQuery's
-    transposing sloppy scorer (documented deviation; the classic parser's
-    ``"a b"~N`` maps here). A match anchored at a start position q of
-    term_0 exists iff the GREEDY chain (each next term at its smallest
-    position strictly greater than the previous slot's) spans ≤ slop
-    intervening non-matched positions: width = p_last − q − (m−1) ≤ slop.
-    Greedy minimizes the final position for a given start, so it decides
-    existence exactly; pf = number of matching start positions, unweighted
-    (vs Lucene's 1/(distance+1) weighting — deviation documented in
-    ``IndexReader.search_phrase``). Degenerates to the exact count at
-    slop=0 (asserted in tests)."""
-    if slop == 0:
-        base: np.ndarray | None = None
-        for i, t in enumerate(terms):
-            p = cursors[t].cur_positions() - i
-            base = p if base is None else np.intersect1d(
-                base, p, assume_unique=True)
-            if base.size == 0:
-                return 0
-        return int(base.size)
-    pos_lists = [cursors[t].cur_positions() for t in terms]
-    starts = pos_lists[0].astype(np.int64)
-    prev = starts
-    alive = np.ones(len(starts), dtype=bool)
-    for p in pos_lists[1:]:
-        idx = np.searchsorted(p, prev, side="right")
-        ok = idx < len(p)
-        alive &= ok
-        prev = np.where(ok, p[np.minimum(idx, len(p) - 1)], prev)
-        if not alive.any():
-            return 0
-    width = prev - starts - (len(terms) - 1)
-    return int(np.count_nonzero(alive & (width <= slop)))
-
-
-def _phrase_topk(
-    terms: list[str], cursors: dict[str, "_Cursor"], idf_sum: float,
-    k: int, avgdl: float,
-    deleted: np.ndarray | None = None, allowed: np.ndarray | None = None,
-    slop: int = 0,
-) -> list[tuple[int, float]]:
-    """Phrase top-k: conjunctive leapfrog over the distinct terms'
-    cursors (same loop as :func:`_and_topk`), position verification +
-    phrase-frequency scoring only at aligned docs. ``slop`` relaxes the
-    position check to ordered near-match (see :func:`_phrase_freq`) — the
-    AND prefilter is unchanged (every phrase term must occur in the doc
-    regardless of slop)."""
-    cs = list(cursors.values())
-    if k <= 0 or not cs:
-        return []
-    heap: list[tuple[float, int]] = []
-
-    def offer(doc: int, score: float) -> None:
-        if _in_sorted(deleted, doc):
-            return
-        if allowed is not None and not _in_sorted(allowed, doc):
-            return
-        item = (score, -doc)
-        if len(heap) < k:
-            heapq.heappush(heap, item)
-        elif item > heap[0]:
-            heapq.heapreplace(heap, item)
-
-    while True:
-        if any(c.exhausted for c in cs):
-            break
-        target = max(c.cur_doc for c in cs)
-        for c in cs:
-            if c.cur_doc < target:
-                c.next_geq(target)
-        if any(c.exhausted for c in cs):
-            break
-        if all(c.cur_doc == target for c in cs):
-            pf = _phrase_freq(terms, cursors, slop)
-            if pf:
-                c0 = cs[0]
-                dl = float(c0.dls[c0.pos])
-                score = idf_sum * pf / (pf + _norm(dl, avgdl))
-                offer(target, score)
-            for c in cs:
-                c.advance()
-
-    out = sorted(heap, key=lambda it: (-it[0], -it[1]))
-    return [(-d, s) for s, d in out]
-
-
-def _wand_topk(
-    cursors: list[_Cursor], k: int, deleted: np.ndarray | None = None,
-    allowed: np.ndarray | None = None,
-    after: tuple[int, float] | None = None,
-) -> list[tuple[int, float]]:
-    """Exact disjunctive top-k under (score desc, doc_id asc).
-
-    Plain term cursors dispatch to the vectorized exact scorer
-    (``_vec_topk`` — r6: one columnar pass beats per-posting interpreted
-    skipping by ~2 orders of magnitude at any realistic selectivity);
-    non-plain cursor mixes run the block-max WAND loop below. Either way
-    the result is the exact top-k: WAND's pruning uses strict ``ub < θ``
-    so boundary ties are always evaluated — exactness over marginal
-    pruning (SURVEY.md §4.3.3 correctness guard) — and the kernel skips
-    nothing at all.
-
-    ``deleted``: sorted tombstoned doc_ids (Lucene deleted-docs visibility
-    filter) — tombstoned docs are evaluated but never admitted to the heap.
-    ``allowed``: optional sorted visibility allowlist (the fq-filtered
-    search surface) — docs outside it are evaluated but never admitted.
-    ``after``: cursor-paging mark — the previous page's last hit
-    ``(doc_id, score)`` exactly as these methods return hits (Lucene
-    ``searchAfter`` / Solr cursorMark): only docs STRICTLY after it in
-    (score desc, doc_id asc) result order are admitted, so consecutive
-    pages partition the full ranking with no overlap and no drift
-    regardless of how deep the caller pages.
-    """
-    if k <= 0:
-        return []
-    if _vec_ok(cursors):
-        units = [_cursor_unit(c)
-                 for c in sorted(cursors, key=lambda c: c.term)]
-        return _vec_topk([], units, k, cursors[0].avgdl if cursors else 0.0,
-                         deleted=deleted, allowed=allowed, after=after)
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-    after_item = (after[1], -after[0]) if after is not None else None
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) >= k else -math.inf
-
-    def offer(doc: int, score: float) -> None:
-        if _in_sorted(deleted, doc):
-            return
-        if allowed is not None and not _in_sorted(allowed, doc):
-            return
-        item = (score, -doc)
-        if after_item is not None and item >= after_item:
-            return  # at or before the page cursor: already served
-        if len(heap) < k:
-            heapq.heappush(heap, item)
-        elif item > heap[0]:
-            heapq.heapreplace(heap, item)
-
-    live = [c for c in cursors if not c.exhausted]
-    while live:
-        live = [c for c in live if not c.exhausted]
-        if not live:
-            break
-        live.sort(key=lambda c: c.cur_doc)
-        # find pivot: smallest prefix whose UB sum can beat θ
-        acc = 0.0
-        pivot_idx = -1
-        for i, c in enumerate(live):
-            acc += c.global_ub
-            # ">=" (not ">") so exact-tie candidates at θ are still evaluated
-            # — required for rank-identity under the doc_id tie-break
-            if acc >= theta():
-                pivot_idx = i
-                break
-        if pivot_idx == -1:
-            break  # no remaining doc can enter the heap
-        pivot_doc = live[pivot_idx].cur_doc
-        if live[0].cur_doc == pivot_doc:
-            # block-max refinement: per-block bounds at the pivot
-            block_acc = 0.0
-            for c in live:
-                if c.cur_doc > pivot_doc:
-                    break
-                c.next_geq(pivot_doc)  # ensures current block contains ≥ pivot
-                if not c.exhausted and c.cur_doc <= c.block_last():
-                    block_acc += c.block_ub()
-            if len(heap) >= k and block_acc < theta():
-                # skip: docs in [pivot, target) live only in the pivot
-                # cursors (all others sit at ≥ next_cur) and are bounded by
-                # block_acc < θ while ≤ every pivot cursor's block_last —
-                # so the jump target is min(shallowest block boundary + 1,
-                # next non-pivot cursor position). (Ding & Suel 2011, BMW.)
-                boundary = min(
-                    c.block_last() for c in live if c.cur_doc <= pivot_doc
-                )
-                next_cur = min(
-                    (c.cur_doc for c in live if c.cur_doc > pivot_doc),
-                    default=1 << 62,
-                )
-                target = min(boundary + 1, next_cur)
-                for c in live:
-                    if c.cur_doc <= pivot_doc:
-                        c.next_geq(target)
-                continue
-            # full evaluation, summing in ascending-term order
-            score = 0.0
-            for c in sorted(
-                (c for c in live if c.cur_doc == pivot_doc),
-                key=lambda c: c.term,
-            ):
-                score += c.contribution()
-            offer(pivot_doc, score)
-            for c in live:
-                if c.cur_doc == pivot_doc:
-                    c.advance()
-        else:
-            # advance the laggard with the largest upper bound (classic pick)
-            laggards = [c for c in live if c.cur_doc < pivot_doc]
-            mover = max(laggards, key=lambda c: c.global_ub)
-            mover.next_geq(pivot_doc)
-
-    out = sorted(heap, key=lambda it: (-it[0], -it[1]))
-    return [(-d, s) for s, d in out]

@@ -21,7 +21,7 @@ by-query). The engine's equivalents, designed for the 100-TB posture:
 
 Invariant kept: per-part doc-id ranges stay disjoint and sorted (appended
 docs get ids ≥ old N), so per-term block lists still concatenate into
-globally sorted posting lists and both WAND paths work unchanged.
+globally sorted posting lists and both query routes work unchanged.
 """
 
 from __future__ import annotations

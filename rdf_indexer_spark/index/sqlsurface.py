@@ -10,14 +10,15 @@ worker, where no SparkSession exists — so it does NOT route through the
 driver-side ``IndexReader``. Instead it reads the query's posting blocks
 straight from the index parquet with pyarrow (``term``-filtered, so parquet
 row-group statistics prune the scan exactly like the DataFrame path) and
-runs the same `_wand_topk` cursor walk ``IndexReader.search_wand`` uses —
-rank- and score-identical by construction (shared code, shared tokenizer,
-shared idf formula; asserted in tests/test_index.py).
+scores them with the same columnar core the driver and executor routes run
+(``bm25._local_clauses`` over ``bm25._vec_topk``) — rank- and
+score-identical by construction (shared code, shared tokenizer, shared idf
+formula; asserted in tests/test_index.py).
 
 At cluster scale this is the "serving" shape: the search runs as ONE task
 wherever Spark schedules it, nothing is collected to the driver, and the
 block fetch is bounded by the query's terms. (For hot multi-TB terms the
-distributed per-bucket walk in bm25.search_wand_distributed remains the
+per-part executor route of bm25.search_wand_distributed remains the
 right path; the UDTF is the SQL-facing point-query surface.)
 
 Usage::
@@ -65,8 +66,8 @@ def _allowed_local(index_dir: str, where: str | None) -> np.ndarray | None:
     Simple fq shapes (equality / ranges / IN / arithmetic / AND-OR) mean
     the same thing in DuckDB and Spark SQL; this mirrors how Solr evaluates
     fq inside the index rather than in the client (SolrClient.java:144-163).
-    For unselective predicates over a multi-TB docstore the distributed
-    cogrouped walk (bm25.search_wand_distributed) remains the right path —
+    For unselective predicates over a multi-TB docstore the cogrouped
+    executor route (bm25.search_wand_distributed) remains the right path —
     this is the single-task serving surface."""
     if where is None:
         return None
@@ -128,94 +129,78 @@ def _expand_local(index_dir: str, p) -> list[tuple[list[str], str, float]]:
     return out
 
 
-def _mixed_local(index_dir: str, spec, k: int,
-                 where: str | None = None) -> list[tuple[int, float]]:
-    """Worker-side mixed scorer tree (phrases interleaved with boolean
-    clauses): pyarrow-fetched blocks WITH positions into the shared
-    ``bm25._mixed_walk`` — the SQL-surface twin of
-    ``IndexReader._search_mixed``."""
-    import math as _math
-
+def _clauses_local(index_dir: str, spec, k: int, where: str | None = None,
+                   mm: int = 0, after: tuple[int, float] | None = None,
+                   ) -> list[tuple[int, float]]:
+    """Worker-side run of one clause tree: pyarrow-fetched blocks (WITH
+    positions when the spec has phrase clauses) into the shared
+    ``bm25._local_clauses`` — the SQL-surface twin of the driver route of
+    ``IndexReader.search_wand`` / ``search_boolean`` /
+    ``search_grouped_boolean`` / ``search_phrase`` / ``search_lucene``
+    (same spec and idfs in → bit-identical hits out)."""
     import pyarrow.parquet as pq
 
-    from .bm25 import _excluded_ids, _merge_deleted, _mixed_walk
+    from .bm25 import _by_term, _local_clauses
 
     term_groups, should_terms, must_not, phrases, not_phrases = spec
     phrase_terms = {t for toks, *_ in phrases for t in toks}
     np_terms = {t for toks, _ in not_phrases for t in toks}
-    scored = sorted({t for g, _ in term_groups for t in g}
-                    | {t for t, _ in should_terms} | phrase_terms)
+    scored = ({t for g, _ in term_groups for t in g}
+              | {t for t, _ in should_terms} | phrase_terms)
     if not scored:
         return []
     state = _load_reader_state(index_dir)
     ts = pq.read_table(
         os.path.join(index_dir, "termstats"),
-        filters=[("term", "in",
-                  sorted(set(scored) | set(must_not) | np_terms))],
+        filters=[("term", "in", sorted(scored | set(must_not) | np_terms))],
     ).to_pylist()
     indexed = {r["term"] for r in ts}
+    # global MatchNoDocs: a required clause with an unindexed member
     for g, _ in term_groups:
         if not any(t in indexed for t in g):
             return []
     for toks, required, _, _ in phrases:
         if required and any(t not in indexed for t in toks):
             return []
-    base_idfs = {
-        r["term"]: _math.log(
+    idfs = {
+        r["term"]: math.log(
             1.0 + (state["n_docs"] - r["df"] + 0.5) / (r["df"] + 0.5))
-        for r in ts if r["term"] in set(scored)
+        for r in ts if r["term"] in scored
     }
-    if not base_idfs:
+    if not idfs:
         return []
-    fetch = sorted(set(base_idfs) | set(must_not)
-                   | (np_terms & indexed))
-    blocks_tbl = pq.read_table(
+    positional = bool(phrase_terms or np_terms)
+    by_term = _by_term(pq.read_table(
         os.path.join(index_dir, "blocks"),
-        columns=["term", "first_doc_id", "last_doc_id", "n", "max_tf",
-                 "dl_min", "ids_bin", "tfs_bin", "dls_bin", "pos_bin"],
-        filters=[("term", "in", fetch)],
-    )
-    by_term: dict[str, list] = {}
-    for rec in blocks_tbl.to_pylist():
-        by_term.setdefault(rec["term"], []).append(rec)
-    for t in by_term:
-        by_term[t].sort(key=lambda r: r["first_doc_id"])
+        columns=["term", "first_doc_id", "ids_bin", "tfs_bin", "dls_bin",
+                 *(["pos_bin"] if positional else [])],
+        filters=[("term", "in",
+                  sorted(set(idfs) | set(must_not) | (np_terms & indexed)))],
+    ).to_pylist())
     if any(r["pos_bin"] is None
            for t in (phrase_terms | np_terms) for r in by_term.get(t, [])):
         raise ValueError(
             "not a positional index: rebuild with "
             "build_index(positions=True) for phrase queries")
-    allowed = _allowed_local(index_dir, where)
-    if allowed is not None and not len(allowed):
-        return []
-    excluded = _excluded_ids(
-        [r for t in must_not for r in by_term.get(t, [])])
-    merged = _merge_deleted(state["tombstones"], excluded)
-    return _mixed_walk(by_term, base_idfs, state["avgdl"], term_groups,
-                       should_terms, phrases, k, merged, allowed,
-                       not_phrases=not_phrases)
+    return _local_clauses(by_term, state["tombstones"],
+                          _allowed_local(index_dir, where), spec=spec,
+                          idfs=idfs, k=k, avgdl=state["avgdl"], mm=mm,
+                          after=after)
 
 
 def _lucene_local(index_dir: str, query: str, k: int,
                   where: str | None = None,
                   mm: int = 0) -> list[tuple[int, float]]:
     """Worker-side Lucene classic-syntax search: parse the ``q`` string
-    (qparse) and run the boolean walk over pyarrow-fetched blocks — the
-    same MUST/SHOULD/MUST_NOT/boost semantics as
-    ``IndexReader.search_boolean``, sharing `_boolean_topk` and the
-    ids-only MUST_NOT decode. Lone unboosted phrase clauses route to
-    phrase mode (slop honored); wildcard/fuzzy clauses expand via
-    :func:`_expand_local` and MUST expansions run the shared grouped walk
-    (`_grouped_topk`); phrase clauses mixed with other clauses (or
-    boosted, or several) run the shared mixed scorer tree
-    (`bm25._mixed_walk`) — identical spec construction to
-    ``IndexReader.search_lucene``, so hits match the driver path
-    bit-for-bit."""
-    import pyarrow.parquet as pq
-
-    from .bm25 import (_boolean_topk, _Cursor, _excluded_ids,
-                       _grouped_topk, _merge_deleted, _mixed_spec,
-                       _mixed_walk, _wand_topk)
+    (qparse) into the clause spec ``IndexReader.search_lucene`` builds —
+    MUST/SHOULD/MUST_NOT/boost terms as in ``search_boolean``,
+    wildcard/fuzzy clauses expanded via :func:`_expand_local` (MUST
+    expansions as at-least-one-of groups), phrase clauses mixed with other
+    clauses (or boosted, or several) through the shared ``_mixed_spec``;
+    lone unboosted phrase clauses route to phrase mode (slop honored) —
+    and run it through :func:`_clauses_local`, so hits match the driver
+    route bit-for-bit."""
+    from .bm25 import _mixed_spec
     from .qparse import parse_query
 
     p = parse_query(query)
@@ -234,7 +219,7 @@ def _lucene_local(index_dir: str, query: str, k: int,
         spec = _mixed_spec(p, _expand_local(index_dir, p))
         if spec is None:
             return []  # empty rewritten MUST clause: MatchNoDocs
-        return _mixed_local(index_dir, spec, k, where)
+        return _clauses_local(index_dir, spec, k, where)
     boosts: dict[str, float] = {}
     for t, b in [*p.must, *p.should]:
         boosts.setdefault(t, b)
@@ -247,79 +232,21 @@ def _lucene_local(index_dir: str, query: str, k: int,
         elif occ == "+":
             if not exp:
                 return []  # empty rewritten MUST clause: MatchNoDocs
-            groups.append((exp, b))
+            groups.append((sorted(set(exp)), b))
         else:
             should_set.update(exp)
             if b != 1.0:
                 for t in exp:
                     boosts.setdefault(t, b)
+    # plain MUST terms ride as singleton groups ahead of the expansions;
+    # a term's weight is idf · its first boost
     must_t = sorted({t for t, _ in p.must})
     group_terms = {t for g, _ in groups for t in g}
     should_t = sorted(should_set - set(must_t) - group_terms)
-    mn_t = sorted(mn_set)
-    scored = sorted(set(must_t) | set(should_t) | group_terms)
-    if not scored:
-        return []
-    state = _load_reader_state(index_dir)
-    ts = pq.read_table(
-        os.path.join(index_dir, "termstats"),
-        filters=[("term", "in", scored)],
-    ).to_pylist()
-    base_idfs = {
-        r["term"]: math.log(
-            1.0 + (state["n_docs"] - r["df"] + 0.5) / (r["df"] + 0.5))
-        for r in ts
-    }
-    idfs = {t: boosts.get(t, 1.0) * v for t, v in base_idfs.items()}
-    if any(t not in idfs for t in must_t) or not idfs:
-        return []
-    fetch = sorted(set(idfs) | set(mn_t))
-    blocks_tbl = pq.read_table(
-        os.path.join(index_dir, "blocks"),
-        columns=["term", "first_doc_id", "last_doc_id", "n", "max_tf",
-                 "dl_min", "ids_bin", "tfs_bin", "dls_bin"],
-        filters=[("term", "in", fetch)],
-    )
-    by_term: dict[str, list] = {}
-    for rec in blocks_tbl.to_pylist():
-        by_term.setdefault(rec["term"], []).append(rec)
-    for t in by_term:
-        by_term[t].sort(key=lambda r: r["first_doc_id"])
-    allowed = _allowed_local(index_dir, where)
-    if allowed is not None and not len(allowed):
-        return []
-    excluded = _excluded_ids(
-        [r for t in mn_t for r in by_term.get(t, [])])
-    merged = _merge_deleted(state["tombstones"], excluded)
-    should_c = [_Cursor(t, idfs[t], by_term[t], state["avgdl"])
-                for t in should_t if t in by_term]
-    if groups:
-        # grouped MUST walk — plain MUST terms ride as singleton groups,
-        # expanded group members score base_idf · group boost
-        gs = [[_Cursor(t, idfs[t], by_term[t], state["avgdl"])]
-              for t in must_t if t in by_term]
-        if len(gs) < len(must_t):
-            return []
-        for g, b in groups:
-            cs = [_Cursor(t, base_idfs[t] * b, by_term[t], state["avgdl"])
-                  for t in sorted(set(g)) if t in base_idfs and t in by_term]
-            if not cs:
-                return []
-            gs.append(cs)
-        return _grouped_topk(gs, should_c, k, deleted=merged,
-                             allowed=allowed)
-    must_c = [_Cursor(t, idfs[t], by_term[t], state["avgdl"])
-              for t in must_t if t in by_term]
-    if must_t:
-        return _boolean_topk(must_c, should_c, k, len(must_t),
-                             deleted=merged, allowed=allowed,
-                             min_should_match=mm)
-    if mm > 1:
-        from .bm25 import _or_topk
-
-        return _or_topk(should_c, k, deleted=merged, allowed=allowed,
-                        min_match=mm)
-    return _wand_topk(should_c, k, deleted=merged, allowed=allowed)
+    spec = ([([t], boosts.get(t, 1.0)) for t in must_t] + groups,
+            [(t, boosts.get(t, 1.0)) for t in should_t], sorted(mn_set),
+            [], [])
+    return _clauses_local(index_dir, spec, k, where, mm=mm)
 
 
 def _search_local(index_dir: str, query: str, k: int,
@@ -328,19 +255,17 @@ def _search_local(index_dir: str, query: str, k: int,
                   slop: int = 0, mm: int = 0,
                   after: tuple[int, float] | None = None,
                   ) -> list[tuple[int, float]]:
-    """The full WAND walk against the on-disk index, no Spark involved.
-
-    Reuses the exact cursor/walk implementation of the driver path
-    (bm25._Cursor / bm25._wand_topk / bm25._and_topk) over pyarrow-fetched
-    blocks. ``mode="and"`` = strict Lucene +required (every query term
-    required; a term absent from the index matches nothing). ``where`` is
-    the fq visibility filter (Solr q+fq: non-scoring), evaluated on the
-    worker against the docstore — see :func:`_allowed_local`."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
+    """One search against the on-disk index, no Spark involved: the query
+    becomes the clause spec the driver route builds (``or``/``and`` as in
+    ``IndexReader.search_wand``, ``phrase`` as in ``search_phrase``,
+    ``lucene`` as in ``search_lucene``) and runs through the shared
+    columnar core over pyarrow-fetched blocks. ``mode="and"`` = strict
+    Lucene +required (every query term required; a term absent from the
+    index matches nothing). ``where`` is the fq visibility filter (Solr
+    q+fq: non-scoring), evaluated on the worker against the docstore — see
+    :func:`_allowed_local`."""
     from ..analyzer import tokenize
-    from .bm25 import _Cursor, _and_topk, _phrase_topk, _wand_topk
+    from .bm25 import _terms_spec
 
     if after is not None and mode not in ("or", "and"):
         raise ValueError("cursor paging (after) supports mode='or'/'and' "
@@ -352,74 +277,14 @@ def _search_local(index_dir: str, query: str, k: int,
     if mm and mode != "or":
         raise ValueError("mm applies to mode='or' or plain 'lucene' "
                          "queries only")
-    state = _load_reader_state(index_dir)
     toks = tokenize(query)  # order + duplicates kept (phrase mode)
-    terms = sorted(set(toks))
-    if not terms:
+    if not toks:
         return []
-    ts = pq.read_table(
-        os.path.join(index_dir, "termstats"),
-        filters=[("term", "in", terms)],
-    ).to_pylist()
-    idfs = {
-        r["term"]: math.log(
-            1.0 + (state["n_docs"] - r["df"] + 0.5) / (r["df"] + 0.5)
-        )
-        for r in ts
-    }
-    if not idfs:
-        return []
-    cols = ["term", "first_doc_id", "last_doc_id", "n", "max_tf",
-            "dl_min", "ids_bin", "tfs_bin", "dls_bin"]
-    if mode == "phrase":
-        cols.append("pos_bin")
-    blocks_tbl = pq.read_table(
-        os.path.join(index_dir, "blocks"),
-        columns=cols,
-        filters=[("term", "in", list(idfs))],
-    )
-    by_term: dict[str, list] = {}
-    for rec in blocks_tbl.to_pylist():
-        by_term.setdefault(rec["term"], []).append(rec)
-    for t in by_term:
-        by_term[t].sort(key=lambda r: r["first_doc_id"])
-    allowed = _allowed_local(index_dir, where)
-    if allowed is not None and not len(allowed):
-        return []  # predicate admits nothing: skip the walk
-    if mode == "phrase":
-        # Lucene PhraseQuery in SQL: every phrase term required; score =
-        # (Σ idf with multiplicity) · pf/(pf + K(dl)) — identical walk to
-        # IndexReader.search_phrase (shared _phrase_topk)
-        if any(t not in idfs or t not in by_term for t in terms):
-            return []
-        if any(r["pos_bin"] is None
-               for recs in by_term.values() for r in recs):
-            raise ValueError(
-                "not a positional index: rebuild with "
-                "build_index(positions=True) for phrase queries")
-        cursors_d = {
-            t: _Cursor(t, idfs[t], by_term[t], state["avgdl"])
-            for t in terms
-        }
-        idf_sum = sum(idfs[t] for t in toks)
-        return _phrase_topk(toks, cursors_d, idf_sum, k, state["avgdl"],
-                            deleted=state["tombstones"], allowed=allowed,
-                            slop=slop)
-    cursors = [
-        _Cursor(t, idfs[t], by_term[t], state["avgdl"])
-        for t in sorted(idfs) if t in by_term
-    ]
-    if mode == "and":
-        # n_required = EVERY query term (same contract as search_wand)
-        return _and_topk(cursors, k, len(terms), deleted=state["tombstones"],
-                         allowed=allowed, after=after)
-    if mm > 1:
-        from .bm25 import _or_topk
-
-        return _or_topk(cursors, k, deleted=state["tombstones"],
-                        allowed=allowed, min_match=mm, after=after)
-    return _wand_topk(cursors, k, deleted=state["tombstones"],
-                      allowed=allowed, after=after)
+    # Lucene PhraseQuery in SQL: every phrase term required; score =
+    # (Σ idf with multiplicity) · pf/(pf + K(dl))
+    spec = (([], [], [], [(toks, True, 1.0, slop)], []) if mode == "phrase"
+            else _terms_spec(sorted(set(toks)), mode))
+    return _clauses_local(index_dir, spec, k, where, mm=mm, after=after)
 
 
 def _facets_local(index_dir: str, query: str, fields: list[str],
@@ -494,9 +359,9 @@ def register_sql_surface(spark, index_dir: str, name: str = "bm25_search"):
     Solr ``+term`` surface in SQL), 'phrase' (exact consecutive
     sequence over a positional index — the Lucene ``"quoted phrase"``
     surface; requires ``build_index(positions=True)``), or 'lucene'
-    (the full classic query string: ``+must -not term^boost`` and lone
-    quoted phrases, parsed by qparse and run through the boolean
-    walk — ``IndexReader.search_lucene`` in SQL); ``where`` is an
+    (the full classic query string: ``+must -not term^boost``, quoted
+    phrases, wildcards and fuzzy terms, parsed by qparse —
+    ``IndexReader.search_lucene`` in SQL); ``where`` is an
     optional fq visibility predicate over the docstore (the Solr q+fq
     composition — relevance plus a non-scoring filter), evaluated
     index-side on the worker exactly like ``IndexReader.search(where=...)``;

@@ -401,9 +401,10 @@ def _reader_for(spark, sf, positional: bool = False):
 
 
 def q_bm25_topk_wand(spark, sf):
-    """Q-9 end-to-end through the REAL engine: on-disk blocks + block-max
-    WAND top-10, oracle-checked against a from-scratch SQL BM25 (rounded
-    scores; ties broken by doc_id in both engines)."""
+    """Q-9 end-to-end through the REAL engine: on-disk blocks + the
+    columnar scoring core's top-10 on the driver route, oracle-checked
+    against a from-scratch SQL BM25 (rounded scores; ties broken by doc_id
+    in both engines)."""
     from .index.bm25 import IndexReader
 
     reader = _reader_for(spark, sf)
@@ -414,7 +415,7 @@ def q_bm25_topk_wand(spark, sf):
 
 
 def q_bm25_topk_wand_dist(spark, sf):
-    """Q-9 through the DISTRIBUTED WAND path: the block-max cursor walk runs
+    """Q-9 through the DISTRIBUTED route: the columnar local top-k runs
     per part bucket on the executors (applyInPandas), the driver merges
     ≤ parts·k rows — the 100-TB query shape (no block bytes reach the
     driver). Oracle: the same from-scratch SQL BM25 top-10."""
@@ -429,9 +430,10 @@ def q_bm25_topk_wand_dist(spark, sf):
 
 def q_bm25_topk_and(spark, sf):
     """Conjunctive (pure-AND) BM25 top-10 — Lucene +required semantics:
-    only docs containing EVERY query term, leapfrog cursor intersection
-    (bm25._and_topk). Oracle: the from-scratch SQL BM25 with a HAVING
-    matched-terms = |index-present query terms| clause."""
+    only docs containing EVERY query term, each term its own required
+    unit group in the columnar core (bm25._local_clauses). Oracle: the
+    from-scratch SQL BM25 with a HAVING matched-terms = |index-present
+    query terms| clause."""
     from .index.bm25 import IndexReader
 
     reader = _reader_for(spark, sf)
@@ -511,8 +513,9 @@ def q_bm25_after_update(spark, sf):
 def q_bm25_topk_filtered(spark, sf):
     """BM25 top-10 under an fq visibility filter (Q-2/Q-3 COMBINED with
     Q-9, the Solr q+fq shape): scores unchanged, only docs satisfying the
-    docstore predicate are admissible. Routed through the DISTRIBUTED walk
-    (filter ships as a broadcast). Oracle: the same SQL BM25 with the
+    docstore predicate are admissible. Routed through the DISTRIBUTED
+    route (the predicate is evaluated per part, cogrouped with the block
+    scan). Oracle: the same SQL BM25 with the
     predicate on the final selection."""
     from .index.bm25 import IndexReader
 
@@ -528,7 +531,7 @@ def q_bm25_topk_filtered(spark, sf):
 def q_bm25_sql_surface(spark, sf):
     """Q-9 through the SQL table-valued surface: ``SELECT * FROM
     bm25_search('…', 10)`` (index/sqlsurface.py — a Python UDTF running the
-    same WAND cursor walk executor-side over pyarrow-read blocks). Oracle:
+    same columnar core executor-side over pyarrow-read blocks). Oracle:
     the same from-scratch SQL BM25 top-10 as bm25_topk_wand."""
     from .index.sqlsurface import register_sql_surface
 
@@ -725,16 +728,16 @@ def q_ann_batch(spark, sf):
 
 def q_rdf_documents(spark, sf):
     """RDF parse layer end-to-end on the reference fixtures (rows-only;
-    field-level goldens live in tests/test_pipeline.py)."""
+    field-level goldens live in tests/test_pipeline.py). A missing fixture
+    raises FileNotFoundError naming its path."""
     from .fields import assemble_documents
     from .rdfxml import parse_files_df
 
     rows = []
     for fn in ("bad_nines_element.rdf", "bad_date.rdf", "role_test.rdf"):
         path = f"/root/reference/test_data/{fn}"
-        if os.path.exists(path):
-            with open(path, encoding="utf-8", errors="replace") as f:
-                rows.append((fn, f.read()))
+        with open(path, encoding="utf-8", errors="replace") as f:
+            rows.append((fn, f.read()))
     files_df = spark.createDataFrame(rows, ["file", "content"])
     docs, _, _ = assemble_documents(parse_files_df(files_df))
     return docs.select(
@@ -750,9 +753,8 @@ def q_rdf_errors(spark, sf):
     for fn in ("bad_nines_element.rdf", "bad_date.rdf", "invalid_xml.rdf",
                "role_test.rdf"):
         path = f"/root/reference/test_data/{fn}"
-        if os.path.exists(path):
-            with open(path, encoding="utf-8", errors="replace") as f:
-                rows.append((fn, f.read()))
+        with open(path, encoding="utf-8", errors="replace") as f:
+            rows.append((fn, f.read()))
     files_df = spark.createDataFrame(rows, ["file", "content"])
     _, errors, _ = assemble_documents(parse_files_df(files_df))
     return errors
@@ -762,8 +764,8 @@ def q_bm25_batch(spark, sf):
     """Batch query serving (r4, the QPS surface): TWO queries answered by
     ONE distributed job — ``IndexReader.search_many`` shares a single
     termstats scan and a single term-pruned block scan across the whole
-    query set, the per-part walker runs each query's exact block-max WAND
-    walk over the part's shared block rows, and the driver merges
+    query set, each part decodes its blocks once and scores every query
+    through the columnar core, and a window rank merges
     ≤ parts·k·|Q| rows. Per query rank/score-identical to search_wand
     (test_index); oracle: per-query from-scratch SQL BM25, UNION ALL."""
     from .index.bm25 import IndexReader
@@ -918,7 +920,7 @@ def q_bm25_wildcard(spark, sf):
     """Lucene WildcardQuery through the full production path: ``+s*
     query`` — the pattern expands against the term dictionary (ONE
     termstats scan, SCORING_BOOLEAN rewrite capped top-df) into a MUST
-    at-least-one-of group on the grouped walk
+    at-least-one-of unit group
     (IndexReader.search_grouped_boolean), the SHOULD term riding along.
     Oracle: DuckDB restates BOTH stages — the dictionary expansion with
     the identical anchored regex + (df desc, term asc) cap, then the
@@ -974,11 +976,11 @@ def q_bm25_lucene_mixed(spark, sf):
     (Lucene BooleanQuery containing a PhraseQuery — the composition the
     classic ``q`` string produces naturally): ``+"table hash" filter
     -dup`` gates on the exact phrase, rides the SHOULD term, and excludes
-    docs containing the prohibited term, all in a single walk
-    (IndexReader._search_mixed: required phrase = a _PhraseCursor group on
-    the grouped leapfrog). Oracle: DuckDB restates the phrase pf
-    (adjacency self-join), the SHOULD term's BM25 contribution, and the
-    exclusion set from scratch."""
+    docs containing the prohibited term, all in a single scoring pass
+    (IndexReader._search_clauses: the required phrase is one scoring unit
+    with tf := pf, gating as its own group). Oracle: DuckDB restates the
+    phrase pf (adjacency self-join), the SHOULD term's BM25 contribution,
+    and the exclusion set from scratch."""
     from .index.bm25 import IndexReader
 
     reader = _reader_for(spark, sf, positional=True)
@@ -991,9 +993,10 @@ def q_bm25_lucene_mixed(spark, sf):
 def q_bm25_min_should(spark, sf):
     """Lucene minimumNumberShouldMatch / Solr dismax ``mm``: OR-mode BM25
     over (window, shuffle, join) where a doc must contain ≥ 2 of the
-    query terms — the exact counting OR walk (bm25._or_topk; Lucene's
-    MinShouldMatchSumScorer shape). Oracle: the standard from-scratch SQL
-    BM25 with a HAVING matched-terms ≥ 2 gate."""
+    query terms — the columnar core counts the SHOULD units present at
+    each doc (Lucene's MinShouldMatchSumScorer semantics). Oracle: the
+    standard from-scratch SQL BM25 with a HAVING matched-terms ≥ 2
+    gate."""
     from .index.bm25 import IndexReader
 
     reader = _reader_for(spark, sf)
@@ -1023,10 +1026,10 @@ def q_bm25_cursor_page2(spark, sf):
     """Solr cursorMark / Lucene searchAfter deep paging: page 1 = top-10,
     page 2 = the next 10 strictly after page 1's last (score, doc_id) in
     (score desc, doc_id asc) order. Page 2 runs through the DISTRIBUTED
-    walk (the same `after` predicate applies verbatim per part bucket —
+    route (the same `after` predicate applies verbatim per part bucket —
     parts hold disjoint doc ids — so the driver merge of per-part pages IS
     the global page). Stateless: no start-offset rescoring, page 10^6
-    costs the same one walk. Oracle: the full-ranking SQL BM25 with
+    costs the same one scoring pass. Oracle: the full-ranking SQL BM25 with
     OFFSET 10."""
     from .index.bm25 import IndexReader
 
@@ -1076,7 +1079,7 @@ RERANK_WEIGHT = 0.001
 def q_bm25_rerank(spark, sf):
     """Solr rerank + additive function-query boost (rq={!rerank
     reRankDocs=30} with bf=n_chars): BM25 top-30 candidates from the
-    distributed walk, rescored score + 0.001·n_chars against the pruned
+    distributed route, rescored score + 0.001·n_chars against the pruned
     docstore (broadcast candidate join — the big side never shuffles),
     top-10 under (score desc, doc_id asc). Oracle: the same two-stage
     restatement — SQL BM25 top-30 window, then the boosted re-sort."""
@@ -1194,7 +1197,7 @@ SYNONYMS = {"sort": ["order"], "fast": ["quick"]}  # quick: unindexed member
 def q_bm25_synonyms(spark, sf):
     """Query-time synonyms with Lucene SynonymQuery scoring: each group
     (term + synonyms) is ONE scorer — tf summed across members, idf from
-    the max member df — served through the distributed per-part walk.
+    the max member df — served through the distributed per-part route.
     'quick' is absent from the corpus, so its group degrades to the lone
     indexed member. Oracle: grouped-tf/max-df SQL BM25."""
     from .index.bm25 import IndexReader

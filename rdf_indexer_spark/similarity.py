@@ -276,13 +276,15 @@ def cosine_topk_batch(
     from pyspark.sql.window import Window
 
     q_rows = queries_df.select("query_id", "qvec").collect()
+    if not q_rows:
+        return df.sparkSession.createDataFrame(
+            [], "query_id int, vec_id long, cosine double, rank int")
     qids = np.array([int(r["query_id"]) for r in q_rows], dtype=np.int64)
     qmat = np.array([[float(x) for x in r["qvec"]] for r in q_rows],
                     dtype=np.float64)
-    m, dim = qmat.shape if qmat.ndim == 2 else (0, 0)
+    m, dim = qmat.shape
     # per-query norms with the same exact fold the JVM used per row
-    qns = np.sqrt(_fold_dot(qmat, qmat.T)[np.arange(m), np.arange(m)]) \
-        if m else np.array([])
+    qns = np.sqrt(_fold_dot(qmat, qmat.T)[np.arange(m), np.arange(m)])
 
     def score(batches):
         for pdf in batches:

@@ -6,7 +6,7 @@ Structured Streaming with ``foreachBatch`` committing each micro-batch
 through the SAME append path interactive maintenance uses
 (:func:`..index.maintain.append_documents`) — so a streamed index is at
 every commit point byte-equivalent to a batch index over the documents seen
-so far, and every query surface (WAND driver/distributed walks, phrase,
+so far, and every query surface (driver/distributed routes, phrase,
 SQL UDTF, fq) works mid-stream with no special cases.
 
 Why foreachBatch and not a custom streaming sink: appends must (a) assign

@@ -23,7 +23,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--distributed", action=argparse.BooleanOptionalAction,
                     default=None,
-                    help="force the executor-side cursor walk (per-bucket "
+                    help="force the executor-side route (per-bucket "
                          "applyInPandas + driver merge) on/off; default "
                          "auto-selects by the query's posting volume, "
                          "preferring distributed at scale")
@@ -36,7 +36,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="parse the query as a Lucene classic string "
                          "(+must -prohibited term^boost, \"phrases\"[~slop]"
                          " incl. -\"phrase\" exclusions, wild*cards, "
-                         "fuzzy~N) and run the matching walk")
+                         "fuzzy~N) and run the matching query")
     ap.add_argument("--slop", type=int, default=0,
                     help="with --phrase: ordered near-match within N "
                          "intervening positions (0 = exact)")
@@ -63,7 +63,7 @@ def main(argv: list[str] | None = None) -> int:
             ap.error("--after must be doc_id:score (the previous page's "
                      "last hit)")
         if args.lucene or args.phrase or args.exhaustive:
-            ap.error("--after pages the default walk only (not "
+            ap.error("--after pages the default search only (not "
                      "--lucene/--phrase/--exhaustive)")
         if len(args.query) > 1:
             ap.error("--after cannot be combined with multiple --query")
@@ -84,12 +84,12 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("--lucene cannot be combined with multiple --query")
     if args.phrase and (args.exhaustive or args.distributed is not None):
         ap.error("--phrase cannot be combined with --exhaustive/"
-                 "--distributed (the phrase walk is its own path)")
+                 "--distributed (the phrase search routes itself)")
     if args.phrase and len(args.query) > 1:
         ap.error("--phrase cannot be combined with multiple --query")
     if len(args.query) > 1:
         # batch mode routes through search_many, which has no
-        # exhaustive/driver-walk variant — reject rather than silently
+        # exhaustive/driver-route variant — reject rather than silently
         # ignore the flags, and reject duplicate query strings (they would
         # collapse into one result set via the {q: q} query_id mapping)
         if args.exhaustive:
@@ -148,8 +148,8 @@ def main(argv: list[str] | None = None) -> int:
         hits = [(r["doc_id"], r["score"])
                 for r in reader.score_exhaustive(query, args.k).collect()]
     else:
-        # the engine's default path: auto-selects the executor-side walk
-        # unless the query's fetch volume makes the driver walk a cheap
+        # the engine's default path: auto-selects the executor-side route
+        # unless the query's fetch volume makes the driver route a cheap
         # small-index fast path (bm25.IndexReader.search)
         hits = [(r["doc_id"], r["score"])
                 for r in reader.search(query, args.k,

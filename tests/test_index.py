@@ -2138,39 +2138,67 @@ def test_sql_surface_facets(spark, facet_index_dir):
                   ).collect()
 
 
-def test_vectorized_walks_bit_identical_to_cursor_walks(spark, index_dir, monkeypatch):
-    """r6 optimization guard: every walk's vectorized exact kernel must
-    return byte-identical (doc, score) lists to the doc-at-a-time cursor
-    loops it dispatches away from — same float sums (exact left-fold
-    order), same masks, same (score desc, doc_id asc) tie-break."""
-    import rdf_indexer_spark.index.bm25 as bm25
+def test_vectorized_walks_bit_identical_to_cursor_walks(
+        spark, index_dir, pos_index_dir):
+    """The columnar scoring core returns exactly the (doc, score) lists the
+    doc-at-a-time cursor walks it replaced returned — same float sums
+    (exact left-fold order), same masks, same (score desc, doc_id asc)
+    tie-break. tests/fixtures/bm25_walk_golden.json holds the walks' output
+    on these fixtures, floats written with repr; compared with ==."""
+    import json
+
     from rdf_indexer_spark.index.bm25 import IndexReader
 
-    reader = IndexReader(spark, index_dir)
-    # fq + cursor paging through the public API
-    page1 = reader.search_wand("alpha beta", 3)
+    path = os.path.join(os.path.dirname(__file__), "fixtures",
+                        "bm25_walk_golden.json")
+    with open(path) as f:
+        golden = json.load(f)
+
+    def same(name, want, got):
+        assert got == [(d, s) for d, s in want], name
+
+    r = IndexReader(spark, index_dir)
+    page1 = r.search_wand("alpha beta", 3)
     assert page1
+    terms = {
+        "or": r.search_wand("alpha beta", 5),
+        "and": r.search_wand("alpha beta", 5, mode="and"),
+        "or_4terms": r.search_wand("the alpha gamma needle", 7),
+        "or_where": r.search_wand("alpha", 5, where="doc_id % 2 = 0"),
+        "or_after": r.search_wand("alpha beta", 5, after=page1[-1]),
+        "boolean": r.search_boolean(["alpha"], ["beta", "gamma"], ["needle"],
+                                    k=5, boosts={"beta": 2.0}),
+        "boolean_mm2": r.search_boolean([], ["alpha", "beta", "gamma"], [],
+                                        k=5, min_should_match=2),
+        "grouped": r.search_lucene("+w1* alpha", 5),
+        "synonyms": r.search_synonyms("alpha", {"alpha": ["beta"]}, 5),
+    }
+    assert terms.keys() == golden["index_dir"].keys()
+    for name, got in terms.items():
+        same(name, golden["index_dir"][name], got)
 
-    def run_all():
-        out = []
-        out.append(reader.search_wand("alpha beta", 5))
-        out.append(reader.search_wand("alpha beta", 5, mode="and"))
-        out.append(reader.search_wand("the alpha gamma needle", 7))
-        out.append(reader.search_wand("alpha", 5, where="doc_id % 2 = 0"))
-        out.append(reader.search_wand("alpha beta", 5, after=page1[-1]))
-        out.append(reader.search_boolean(
-            ["alpha"], ["beta", "gamma"], ["needle"], k=5,
-            boosts={"beta": 2.0}))
-        out.append(reader.search_boolean(
-            [], ["alpha", "beta", "gamma"], [], k=5, min_should_match=2))
-        out.append(reader.search_lucene("+w1* alpha", 5))
-        out.append(reader.search_synonyms(
-            "alpha", {"alpha": ["beta"]}, 5))
-        return out
-
-    vec = run_all()
-    monkeypatch.setattr(bm25, "_vec_ok", lambda cursors: False)
-    monkeypatch.setattr(bm25, "_vec_or_units", lambda cursors: None)
-    legacy = run_all()
-    assert vec == legacy
-    assert any(len(v) > 0 for v in vec)
+    p = IndexReader(spark, pos_index_dir)
+    phrases = {
+        "exact": lambda d: p.search_phrase("alpha beta", 50, distributed=d),
+        "slop1": lambda d: p.search_phrase("alpha gamma", 50, slop=1,
+                                           distributed=d),
+        "slop2": lambda d: p.search_phrase("w0 w1", 50, slop=2,
+                                           distributed=d),
+        "dup_terms": lambda d: p.search_phrase("the the", 50, distributed=d),
+        "required_phrase_term": lambda d: p.search_lucene(
+            '+"alpha beta" gamma', 50, distributed=d),
+        "optional_phrase_term": lambda d: p.search_lucene(
+            '"alpha beta" needle', 50, distributed=d),
+        "two_optional_phrases": lambda d: p.search_lucene(
+            '"alpha beta" "needle the"', 50, distributed=d),
+        "prohibited_phrase": lambda d: p.search_lucene(
+            'gamma -"alpha beta"', 50, distributed=d),
+        "phrase_where": lambda d: p.search_phrase(
+            "alpha beta", 50, where="doc_id % 2 = 0", distributed=d),
+    }
+    assert phrases.keys() == golden["pos_index_dir"].keys()
+    for name, run in phrases.items():
+        want = golden["pos_index_dir"][name]
+        assert want, f"vacuous golden case {name!r}"
+        for dist in (False, True):
+            same((name, dist), want, run(dist))

@@ -318,3 +318,19 @@ def test_cosine_topk_batch_bit_identical_to_crossjoin_path(spark, vecs):
            .filter(F.col("rank") <= 5))
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
+
+
+def test_cosine_topk_batch_empty_query_set(spark, vecs):
+    """An empty query set yields an empty (query_id, vec_id, cosine, rank)
+    frame instead of failing inside the fold kernel."""
+    from pyspark.sql import functions as F
+
+    from rdf_indexer_spark.similarity import cosine_topk_batch
+
+    _, df = vecs
+    qdf = df.filter(F.col("vec_id") < 0).select(
+        F.col("vec_id").cast("int").alias("query_id"),
+        F.col("embedding").alias("qvec"))
+    out = cosine_topk_batch(df, qdf, 5)
+    assert out.columns == ["query_id", "vec_id", "cosine", "rank"]
+    assert out.collect() == []
